@@ -28,6 +28,8 @@ import graft.pipeline._
   *     (A17/A23, `/root/reference/Yuki/server/routes/status.py:22-138`)
   *   - `GET  /collect/<run>/<step>`        — output manifest (A21,
   *     `/root/reference/Yuki/server/routes/workflow.py:12-16`)
+  *     — path, schema and row count, read from the parquet footers with
+  *     no Spark job
   *   - `GET  /outputs/<run>/<step>`        — output file listing (A7,
   *     `execution.py:114-127`)
   *   - `GET  /export/<run>/<step>[/<f>]`   — listing / raw file bytes (A2,
@@ -97,6 +99,12 @@ final class HttpApi(runner: Runner, port: Int = 0,
       profileRunners.computeIfAbsent(name,
         _ => mk(graft.core.SessionProfiles.sessionFor(name)))
   }
+
+  // TCP_NODELAY: without it Nagle's algorithm holds a response's body until
+  // the client ACKs its headers, and a keep-alive client delays that ACK,
+  // so each request on a reused connection waited ~40 ms. The JDK server
+  // reads the property once, when the first server in the JVM is created.
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
 
   // LOOPBACK by default: /ingest registers any server-readable path and
   // /export//preview then serve its contents — on a wildcard bind that is
@@ -494,12 +502,10 @@ final class HttpApi(runner: Runner, port: Int = 0,
     resolve(ex.getRequestURI.getPath, "/preview/") match {
       case None => notFound(ex)
       case Some((st, stepId)) =>
-        st.runner.materializedPath(st.spec, stepId) match {
+        st.runner.output(st.spec, stepId) match {
           case None => notFound(ex)
-          case Some(path) =>
-            val df = st.runner.session.read.parquet(path)
-            respond(ex, 200, JObject(
-              "preview" -> JString(st.runner.preview(df, maxRows = 20))))
+          case Some(df) => respond(ex, 200, JObject(
+            "preview" -> JString(st.runner.preview(df, maxRows = 20))))
         }
     }
   })

@@ -7,8 +7,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The transformation registry — typed replacement for the reference's
   * "algorithm" impressions (`/root/reference/Yuki/kernel/image_job.py:15-21`,
@@ -72,7 +77,9 @@ final case class SourceRef(
   * Scale posture: the runner touches only metadata on the driver; all data
   * movement is `spark.read.parquet` → transform → `df.write.parquet`, so a
   * 100 TB step shuffles on the cluster exactly as its operators dictate and
-  * the cache check is one filesystem stat per step.
+  * the cache check is one filesystem stat per step. What a step boundary
+  * needs to know of an output (its schema and row count) is read from the
+  * parquet footers on the driver, so it starts no Spark job.
   */
 final class Runner(
     spark: SparkSession,
@@ -204,6 +211,7 @@ final class Runner(
   private def outDir(imp: String): Path = Paths.get(warehouse, imp)
   private def isMaterialized(imp: String): Boolean =
     Files.exists(outDir(imp).resolve("_SUCCESS"))
+  private def readOutput(imp: String): DataFrame = Runner.readOutput(spark, outDir(imp))
 
   // Per-impression striped lock: serializes the decide-and-run critical
   // section so a concurrent execute() whose spec shares an impression WAITS
@@ -355,8 +363,7 @@ final class Runner(
     // inputs are served WITHOUT the lineage stamp: transforms see clean
     // data, and each step's output carries exactly its own stamp
     def load(id: String): DataFrame =
-      outputs.getOrElseUpdate(id,
-        spark.read.parquet(outDir(imps(id)).toString).drop(Runner.LineageCol))
+      outputs.getOrElseUpdate(id, readOutput(imps(id)).drop(Runner.LineageCol))
 
     order.foreach { step =>
       val imp = imps(step.id)
@@ -430,22 +437,28 @@ final class Runner(
   }
 
   /** Cheap materialization probe: the output path if the step's _SUCCESS
-    * marker exists — one file stat, no Spark job (collect() runs a count).
-    * The right primitive for catalog/tree/deposited browsing. */
+    * marker exists — one file stat, where collect() also reads every part
+    * file's footer. The right primitive for catalog/tree/deposited browsing. */
   def materializedPath(spec: PipelineSpec, id: String): Option[String] = {
     val imp = impressionId(spec, id)
     if (isMaterialized(imp)) Some(outDir(imp).toString) else None
   }
 
+  /** A step's materialized output, lineage column included (the /preview
+    * route's frame). */
+  def output(spec: PipelineSpec, id: String): Option[DataFrame] = {
+    val imp = impressionId(spec, id)
+    if (isMaterialized(imp)) Some(readOutput(imp)) else None
+  }
+
   /** Collect: manifest of a step's materialized output (A21), including
-    * the lineage stamp every row carries. */
+    * the lineage stamp every row carries. Schema and row count come from
+    * the parquet footers: no Spark job. */
   def collect(spec: PipelineSpec, id: String): Option[StepArtifact] = {
     val imp = impressionId(spec, id)
     if (!isMaterialized(imp)) None
-    else {
-      val df = spark.read.parquet(outDir(imp).toString)
-      Some(StepArtifact(id, imp, outDir(imp).toString, df.schema.toDDL, df.count()))
-    }
+    else Some(StepArtifact(id, imp, outDir(imp).toString,
+      readOutput(imp).schema.toDDL, Runner.footerRows(outDir(imp))))
   }
 
   /** Purge: drop the materialized output dir (A6,
@@ -483,8 +496,7 @@ final class Runner(
     val rows = spec.steps.map { step =>
       val imp = impressionId(spec, step.id)
       val mat = isMaterialized(imp)
-      val rowCount =
-        if (mat) spark.read.parquet(outDir(imp).toString).count() else -1L
+      val rowCount = if (mat) Runner.footerRows(outDir(imp)) else -1L
       (step.id, step.transform, imp, statusOf(spec, step.id).name,
         if (mat) outDir(imp).toString else "", rowCount)
     }
@@ -723,6 +735,61 @@ object Runner {
     * and filesystem validation can never diverge. */
   private[graft] def safeSegment(seg: String): Boolean =
     seg.matches("[A-Za-z0-9_.=-]+") && seg != ".." && seg != "."
+
+  // ---- step-boundary metadata from parquet footers ----------------------
+  // `spark.read.parquet(dir)` infers the schema with a Spark job, and
+  // `count()` adds two more; every fact a step boundary needs is already in
+  // the part files' footers, read here on the driver.
+
+  /** Footer key under which Spark writes the frame's schema as JSON; Spark's
+    * own schema inference reads the same key. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Data files of an output dir as Spark's file index picks them: names
+    * starting with `_` or `.` (`_SUCCESS`, checksums) are not data. */
+  private def partFiles(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".") && Files.isRegularFile(p)
+    }.toSeq.sortBy(_.getFileName.toString)
+    finally listing.close()
+  }
+
+  // a plain configuration: the default options build a Hadoop
+  // Configuration per file, which costs ~10 ms against ~0.1 ms for the
+  // footer read itself
+  private val footerOptions =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
+  private def footer[A](file: Path)(read: ParquetFileReader => A): A = {
+    val reader = ParquetFileReader.open(new LocalInputFile(file), footerOptions)
+    try read(reader) finally reader.close()
+  }
+
+  /** Spark schema of a Spark-written output dir, from one part file's
+    * footer: the files of one write share it, and Spark's inference also
+    * reads one file when it does not merge schemas. */
+  private def footerSchema(dir: Path): StructType = {
+    val file = partFiles(dir).headOption
+      .getOrElse(sys.error(s"no parquet part file in $dir"))
+    footer(file)(r => Option(r.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
+      .map(DataType.fromJson) match {
+      case Some(s: StructType) => s
+      case _ => sys.error(s"$file carries no Spark schema")
+    }
+  }
+
+  /** An output dir read with its footer schema. Spark makes the schema
+    * nullable as it would an inferred one, and runs no job: the file
+    * listing is on the driver. */
+  private[graft] def readOutput(spark: SparkSession, dir: Path): DataFrame =
+    spark.read.schema(footerSchema(dir)).parquet(dir.toString)
+
+  /** Exact row count of an output dir: its part files' footer row counts,
+    * summed. */
+  private[graft] def footerRows(dir: Path): Long =
+    partFiles(dir).map(footer(_)(_.getRecordCount)).sum
 
   // Process-global impression state + locks, keyed "warehousePath#imp":
   // every Runner over one warehouse shares admission, whichever session it

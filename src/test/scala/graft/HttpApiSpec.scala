@@ -332,6 +332,69 @@ class HttpApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("/collect starts no Spark job; /preview reads the output") {
+    val wh = Files.createTempDirectory("graft_api_wh_jobs").toString
+    val api = new HttpApi(new Runner(spark, Transforms.standard(), wh)).start()
+    val base = s"http://localhost:${api.boundPort}"
+    try {
+      val runId = runIdOf(post(s"$base/run", s"""{
+        "steps": [
+          {"id": "src", "transform": "source",
+           "params": {"dir": "$sfDir", "table": "region"}},
+          {"id": "names", "transform": "sql", "inputs": {"t": "src"},
+           "params": {"sql": "SELECT r_name FROM t"}}]}""")._2)
+      awaitFinished(base, runId)
+      // the handler runs on a server thread, so count every job the
+      // context starts while the request is served
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val (code, body) =
+        try get(s"$base/collect/$runId/names")
+        finally {
+          org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      assert(code == 200 && body.contains("\"rows\":5") &&
+        body.contains("r_name STRING"), body)
+      assert(jobs.get == 0, s"/collect started ${jobs.get} jobs")
+      assert(get(s"$base/preview/$runId/names")._2.contains("AMERICA"))
+    } finally api.stop()
+  }
+
+  test("keep-alive: requests on one reused connection do not wait for a delayed ACK") {
+    val wh = Files.createTempDirectory("graft_api_wh_ka").toString
+    val api = new HttpApi(new Runner(spark, Transforms.standard(), wh)).start()
+    val socket = new java.net.Socket("127.0.0.1", api.boundPort)
+    try {
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(socket.getInputStream))
+      val out = socket.getOutputStream
+      val request = "GET /ping HTTP/1.1\r\nHost: localhost\r\n\r\n"
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+      // one request and its whole response, in milliseconds
+      def ping(): Double = {
+        val t0 = System.nanoTime()
+        out.write(request)
+        out.flush()
+        val head = new StringBuilder
+        while (!head.endsWith("\r\n\r\n")) head += in.readUnsignedByte().toChar
+        val length = "(?i)content-length:\\s*(\\d+)".r
+          .findFirstMatchIn(head).get.group(1).toInt
+        assert(new String(in.readNBytes(length)).contains("Connected"))
+        (System.nanoTime() - t0) / 1e6
+      }
+      ping()
+      val ms = Seq.fill(10)(ping()).sorted
+      val median = (ms(4) + ms(5)) / 2
+      assert(median < 20, s"median ${median} ms over one connection: $ms")
+    } finally { socket.close(); api.stop() }
+  }
+
   private def postBytes(url: String, body: Array[Byte]): (Int, String) = {
     val r = client.send(HttpRequest.newBuilder(URI.create(url))
       .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.col
 import graft.pipeline._
 
@@ -9,6 +10,15 @@ import graft.pipeline._
   * content-addressed step cache mirroring the reference's
   * materialization-reuse rules. */
 class PipelineSpecTest extends SparkSpec {
+
+  // every warehouse the tests below fill, for the footer-parity sweep at
+  // the end of the suite
+  private val warehouses = scala.collection.mutable.Buffer[String]()
+  private def warehouse(prefix: String): String = {
+    val wh = Files.createTempDirectory(prefix).toString
+    warehouses += wh
+    wh
+  }
 
   private def diamond = PipelineSpec(Seq(
     StepSpec("src", "source", params = Map("dir" -> sfDir, "table" -> "nation")),
@@ -54,7 +64,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("runner: executes DAG, caches steps, reruns only invalidated suffix") {
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = warehouse("graft_wh")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val imps = runner.execute(diamond, Seq("join"))
     assert(runner.status("join") == StepStatus.Finished)
@@ -83,7 +93,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("runner: failed step marks failed and propagates") {
-    val wh = Files.createTempDirectory("graft_wh2").toString
+    val wh = warehouse("graft_wh2")
     val bad = PipelineSpec(Seq(
       StepSpec("src", "source", params = Map("dir" -> sfDir, "table" -> "nation")),
       StepSpec("boom", "sql", Map("t" -> "src"), Map("sql" -> "SELECT no_such_col FROM t"))))
@@ -97,7 +107,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("runner: collect returns manifest; purge removes it") {
-    val wh = Files.createTempDirectory("graft_wh3").toString
+    val wh = warehouse("graft_wh3")
     val spec = PipelineSpec(Seq(
       StepSpec("src", "source", params = Map("dir" -> sfDir, "table" -> "region"))))
     val runner = new Runner(spark, Transforms.standard(), wh)
@@ -109,7 +119,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("runner: query transform exposes the declared operator inventory") {
-    val wh = Files.createTempDirectory("graft_wh4").toString
+    val wh = warehouse("graft_wh4")
     val spec = PipelineSpec(Seq(
       StepSpec("rev", "query", params = Map("name" -> "j1_revenue_by_nation", "dir" -> sfDir))))
     val runner = new Runner(spark, Transforms.standard(), wh)
@@ -118,7 +128,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("decontaminate transform: real eval table + configurable shingle length (r6 #4)") {
-    val wh = Files.createTempDirectory("graft_wh_dc").toString
+    val wh = warehouse("graft_wh_dc")
     val runner = new Runner(spark, Transforms.standard(), wh)
     // a REAL eval table (not a doc_id-slice pseudo-holdout): benchmark
     // rows whose text verbatim-overlaps two train docs. doc_id 1's first
@@ -154,7 +164,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("pipeline_clean: all three gate thresholds are live registry knobs") {
-    val wh = Files.createTempDirectory("graft_wh_pc").toString
+    val wh = warehouse("graft_wh_pc")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val docsStep = StepSpec("docs", "source",
       params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -187,7 +197,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("embed_dedup transform: cosine threshold is a live registry knob") {
-    val wh = Files.createTempDirectory("graft_wh_ed").toString
+    val wh = warehouse("graft_wh_ed")
     val runner = new Runner(spark, Transforms.standard(), wh)
     def spec(theta: String) = PipelineSpec(Seq(
       StepSpec("emb", "source", params = Map("dir" -> sfDir, "table" -> "embeddings")),
@@ -209,7 +219,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("tfidf and bm25 transforms: ranking knobs are live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_ir").toString
+    val wh = warehouse("graft_wh_ir")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val docsStep = StepSpec("docs", "source",
       params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -234,7 +244,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("temperature_mix transform: alpha flattens the mixture toward the tail") {
-    val wh = Files.createTempDirectory("graft_wh_tm").toString
+    val wh = warehouse("graft_wh_tm")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val docsStep = StepSpec("docs", "source",
       params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -255,7 +265,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("manifest lists steps with materialization state; vacuum GCs stale runs") {
-    val wh = Files.createTempDirectory("graft_wh6").toString
+    val wh = warehouse("graft_wh6")
     val runner = new Runner(spark, Transforms.standard(), wh)
     runner.execute(diamond, Seq("join"))
     val m = runner.manifest(diamond).collect()
@@ -279,7 +289,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("status is durable per impression: failures survive restart, edits start raw") {
-    val wh = Files.createTempDirectory("graft_wh7").toString
+    val wh = warehouse("graft_wh7")
     val bad = PipelineSpec(Seq(
       StepSpec("src", "source", params = Map("dir" -> sfDir, "table" -> "nation")),
       StepSpec("boom", "sql", Map("t" -> "src"), Map("sql" -> "SELECT no_such FROM t"))))
@@ -320,7 +330,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("containment_dedup and novelty transforms: shingle knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_cn").toString
+    val wh = warehouse("graft_wh_cn")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val docsStep = StepSpec("docs", "source",
       params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -353,7 +363,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("merge_upsert and transitions transforms through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_mt").toString
+    val wh = warehouse("graft_wh_mt")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val dummy = StepSpec("d0", "source", params = Map("dir" -> sfDir, "table" -> "region"))
     // CDC merge: update k=2, delete k=3, insert k=4
@@ -391,7 +401,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("gap_fill, pmi and quality_rank transforms: knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_gpq").toString
+    val wh = warehouse("graft_wh_gpq")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val evStep = StepSpec("ev", "source", params = Map("dir" -> sfDir, "table" -> "events"))
     val docsStep = StepSpec("docs", "source", params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -428,7 +438,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("snapshot_diff transform: added/removed/changed over arbitrary key/compare lists") {
-    val wh = Files.createTempDirectory("graft_wh_sd").toString
+    val wh = warehouse("graft_wh_sd")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val dummy = StepSpec("d0", "source", params = Map("dir" -> sfDir, "table" -> "region"))
     val spec = PipelineSpec(Seq(dummy,
@@ -449,7 +459,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("scd2 transform: hand-checked history from a VALUES change stream") {
-    val wh = Files.createTempDirectory("graft_wh_scd2").toString
+    val wh = warehouse("graft_wh_scd2")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val dummy = StepSpec("d0", "source", params = Map("dir" -> sfDir, "table" -> "region"))
     // key 1: A (t1, t2 compressed) -> B (t3); key 2: single open row
@@ -476,7 +486,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("time_band_join, event_paths, frame_dup, semdedup: knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_r8").toString
+    val wh = warehouse("graft_wh_r8")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val evStep = StepSpec("ev", "source", params = Map("dir" -> sfDir, "table" -> "events"))
     val docsStep = StepSpec("docs", "source", params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -527,7 +537,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("proto_prune, group_split, conversion_lag: knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_r8b").toString
+    val wh = warehouse("graft_wh_r8b")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val evStep = StepSpec("ev", "source", params = Map("dir" -> sfDir, "table" -> "events"))
     val docsStep = StepSpec("docs", "source", params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -573,7 +583,7 @@ class PipelineSpecTest extends SparkSpec {
 
   test("entropy, zipf, attribution, strat_sample: knobs live through the registry") {
     import org.apache.spark.sql.functions.log
-    val wh = Files.createTempDirectory("graft_wh_r8c").toString
+    val wh = warehouse("graft_wh_r8c")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val docsStep = StepSpec("docs", "source", params = Map("dir" -> sfDir, "table" -> "documents"))
     val evStep = StepSpec("ev", "source", params = Map("dir" -> sfDir, "table" -> "events"))
@@ -615,7 +625,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("funnel_steps and source_kl: knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_r8d").toString
+    val wh = warehouse("graft_wh_r8d")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val evStep = StepSpec("ev", "source", params = Map("dir" -> sfDir, "table" -> "events"))
     val docsStep = StepSpec("docs", "source", params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -664,7 +674,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("freshness and weighted_sample: knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_r8e").toString
+    val wh = warehouse("graft_wh_r8e")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val evStep = StepSpec("ev", "source", params = Map("dir" -> sfDir, "table" -> "events"))
     val docsStep = StepSpec("docs", "source", params = Map("dir" -> sfDir, "table" -> "documents"))
@@ -689,7 +699,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("stale persisted 'running' status demotes to raw and re-executes") {
-    val wh = Files.createTempDirectory("graft_wh8").toString
+    val wh = warehouse("graft_wh8")
     val spec = PipelineSpec(Seq(
       StepSpec("src", "source", params = Map("dir" -> sfDir, "table" -> "region"))))
     val imp = spec.impressionIds("src")
@@ -705,7 +715,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("lineage stamping (A26): each output carries exactly its own impression id") {
-    val wh = Files.createTempDirectory("graft_wh10").toString
+    val wh = warehouse("graft_wh10")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val imps = runner.execute(diamond, Seq("join"))
     diamond.steps.foreach { s =>
@@ -723,7 +733,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("admission is atomic: concurrent executes of one spec write once, no failures") {
-    val wh = Files.createTempDirectory("graft_wh11").toString
+    val wh = warehouse("graft_wh11")
     val runner = new Runner(spark, Transforms.standard(), wh)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -744,7 +754,7 @@ class PipelineSpecTest extends SparkSpec {
     // the HTTP facade builds one Runner per session profile over the same
     // warehouse — admission state must be shared process-wide or two
     // profile runners could both overwrite one impression's output dir
-    val wh = Files.createTempDirectory("graft_wh12").toString
+    val wh = warehouse("graft_wh12")
     val r1 = new Runner(spark, Transforms.standard(), wh)
     val r2 = new Runner(spark.newSession(), Transforms.standard(), wh)
     import scala.concurrent.{Await, Future}
@@ -760,7 +770,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("statusOf is keyed per impression: same step name, different specs") {
-    val wh = Files.createTempDirectory("graft_wh9").toString
+    val wh = warehouse("graft_wh9")
     val specA = PipelineSpec(Seq(
       StepSpec("load", "source", params = Map("dir" -> sfDir, "table" -> "region"))))
     val specB = PipelineSpec(Seq(
@@ -787,7 +797,7 @@ class PipelineSpecTest extends SparkSpec {
       val s = SessionProfiles.sessionFor(pn)
       // profile conf applied to an ISOLATED session (shared context)
       assert(s.conf.get("spark.sql.shuffle.partitions") == parts)
-      val wh = Files.createTempDirectory(s"graft_wh_$pn").toString
+      val wh = warehouse(s"graft_wh_$pn")
       val runner = new Runner(s, Transforms.standard(), wh)
       val imps = runner.execute(spec, Seq("agg"))
       s.read.parquet(s"$wh/${imps("agg")}").count()
@@ -800,7 +810,7 @@ class PipelineSpecTest extends SparkSpec {
 
   test("preview: head+tail with truncation marker") {
     val runner = new Runner(spark, Transforms.standard(),
-      Files.createTempDirectory("graft_wh5").toString)
+      warehouse("graft_wh5"))
     import spark.implicits._
     val df = (1 to 50).toDF("x")
     val full = runner.preview(df.orderBy("x"), maxRows = 30)
@@ -811,7 +821,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("cross-JVM admission lease: live holder blocks, dead holder is stolen") {
-    val wh = Files.createTempDirectory("graft_lease_wh").toString
+    val wh = warehouse("graft_lease_wh")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val spec = PipelineSpec(Seq(StepSpec("load", "source",
       params = Map("dir" -> sfDir, "table" -> "region"))))
@@ -847,7 +857,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("pattern_match and kcore: knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_r8e").toString
+    val wh = warehouse("graft_wh_r8e")
     val runner = new Runner(spark, Transforms.standard(), wh)
     val evStep = StepSpec("ev", "source", params = Map("dir" -> sfDir, "table" -> "events"))
     // pattern_match: a single-letter pattern counts plain occurrences, so
@@ -876,7 +886,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("kcore/label_prop/pagerank converge=true through the registry reach fixpoints") {
-    val wh = Files.createTempDirectory("graft_wh_r10a").toString
+    val wh = warehouse("graft_wh_r10a")
     val runner = new Runner(spark, Transforms.standard(), wh)
     def run(steps: Seq[StepSpec], out: String): org.apache.spark.sql.DataFrame =
       spark.read.parquet(s"$wh/${runner.execute(PipelineSpec(steps), Seq(out))(out)}")
@@ -928,7 +938,7 @@ class PipelineSpecTest extends SparkSpec {
   }
 
   test("topk, linear_attribution and oov_rate: knobs live through the registry") {
-    val wh = Files.createTempDirectory("graft_wh_r8f").toString
+    val wh = warehouse("graft_wh_r8f")
     val runner = new Runner(spark, Transforms.standard(), wh)
     // topk: k rows per group, k=1 set nests in k=3 set
     val ordStep = StepSpec("o", "source", params = Map("dir" -> sfDir, "table" -> "orders"))
@@ -980,7 +990,7 @@ class PipelineSpecTest extends SparkSpec {
     assert(l5cSampleMod(100000L, 160L) == 625L)
     assert(l5cSampleMod(0L, 160L) == 1L, "empty corpus must not divide by 0")
     assert(l5cSampleMod(10L, 0L) == 10L, "degenerate budget clamps to 1-doc sample")
-    val wh = Files.createTempDirectory("graft_wh_sa").toString
+    val wh = warehouse("graft_wh_sa")
     val runner = new Runner(spark, Transforms.standard(), wh)
     def audit(params: (String, String)*) = {
       val imp = runner.execute(PipelineSpec(Seq(
@@ -1006,5 +1016,18 @@ class PipelineSpecTest extends SparkSpec {
     // the audit's own size column must be non-vacuous under the knob too
     assert(row.getLong(row.fieldIndex("n_sample")) > 0,
       "budget=8 audit sample is empty — the contract booleans are vacuous")
+  }
+
+  // Last on purpose: it sweeps the outputs of every transform kind the
+  // tests above ran.
+  test("footer schema and row count equal Spark's read of every output written above") {
+    val dirs = warehouses.toSeq.flatMap { wh =>
+      val listing = Files.list(java.nio.file.Paths.get(wh))
+      try listing.iterator().asScala.filter(d =>
+        !d.getFileName.toString.startsWith("_") && Files.exists(d.resolve("_SUCCESS"))).toSeq
+      finally listing.close()
+    }
+    assert(dirs.size >= 50, s"only ${dirs.size} outputs: run the whole suite")
+    dirs.foreach(FooterMetadataSpec.assertMatchesSparkRead(spark, _))
   }
 }
