@@ -9,6 +9,30 @@ import org.apache.spark.sql.SparkSession
   * partition count sized to the parallelism of the target (32 for the
   * local[32] harness; on a 1000-executor cluster this would be set to
   * ~2-3× total cores by conf, not code).
+  *
+  * Two fixed settings bound the driver's long-lived memory:
+  *
+  *  - `spark.sql.codegen.cache.maxEntries` = 240 (Spark's default is 100).
+  *    Whole-stage code generation only pays when a compiled class is
+  *    reused. The four operators of the benchmark's `operator_kernels`
+  *    workload (l45, l35, l46b, tq2) need about 180 generated classes
+  *    together; at 100 entries every pass evicted and recompiled 75–130
+  *    of them with Janino, and the JIT then compiled the new classes
+  *    again. The cache is Guava's with 4 segments that each evict on
+  *    their own at cap/4, so the cap keeps a third of headroom over the
+  *    working set. At 240 and at 256 alike the timed passes compile 0–4
+  *    classes in all, as few as at a cap of 10,000. Each cached class
+  *    costs about 19 KB of heap (bytecode, source and two class
+  *    loaders), so the cap is not larger. Spark reads it once per JVM,
+  *    when the first query generates code.
+  *  - `spark.ui.retainedJobs`, `spark.ui.retainedStages` and
+  *    `spark.sql.ui.retainedExecutions` = 5 (Spark keeps 1,000 of each).
+  *    The UI is off and nothing in the program reads Spark's status
+  *    store, so that history is heap spent on data no one reads: about
+  *    14 KB per finished query with its jobs and stages. It pays for the
+  *    larger cache in a long-lived server, where a leaf edit writes a
+  *    new literal into its SQL, Spark inlines primitive literals into
+  *    generated code, and the cache fills up with such dead classes.
   */
 object Sessions {
   def tune(b: SparkSession.Builder, cpus: String): SparkSession.Builder = b
@@ -26,6 +50,12 @@ object Sessions {
     // oracle renders the same column.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
+    // see the object doc: codegen cache sized to the operators' working
+    // set, paid for with driver UI history that nothing reads
+    .config("spark.sql.codegen.cache.maxEntries", 240)
+    .config("spark.ui.retainedJobs", 5)
+    .config("spark.ui.retainedStages", 5)
+    .config("spark.sql.ui.retainedExecutions", 5)
     .config("spark.sql.autoBroadcastJoinThreshold", 32 * 1024 * 1024)
     // iterative ops (Graphs.connectedComponents) checkpoint per round when
     // a checkpoint dir is set; delete those files once the RDD is GC'd

@@ -4,17 +4,14 @@ import java.nio.file.{Files, Path, Paths}
 
 /** Session-scoped scratch space. All transient dirs (streaming checkpoints,
   * sink round-trip outputs, stream staging) live under ONE per-process root
-  * that a shutdown hook deletes — repeated query invocations in a long
-  * session no longer accumulate checkpoint/WAL/state dirs until the backing
-  * filesystem (often RAM-backed /dev/shm) fills. */
+  * in `java.io.tmpdir` that a shutdown hook deletes — repeated query
+  * invocations in a long session no longer accumulate checkpoint/WAL/state
+  * dirs until the backing filesystem fills. A caller who wants the
+  * checkpoints on tmpfs passes `-Djava.io.tmpdir=/dev/shm`. */
 object TempDirs {
-  /** tmpfs when available — checkpoint WAL fsyncs are measurement noise on
-    * a local disk; real deployments checkpoint to durable shared storage. */
   private lazy val root: Path = {
-    val shm = Paths.get("/dev/shm")
-    val base = if (Files.isWritable(shm)) shm
-               else Paths.get(System.getProperty("java.io.tmpdir"))
-    val r = Files.createTempDirectory(base, "graft_scratch_")
+    val r = Files.createTempDirectory(
+      Paths.get(System.getProperty("java.io.tmpdir")), "graft_scratch_")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(r)))
     r
   }

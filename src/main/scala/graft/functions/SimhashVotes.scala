@@ -25,6 +25,13 @@ import org.apache.spark.sql.types._
   * Map-side partials mean only 65·8 bytes per group cross the shuffle,
   * identical to the 65-column form; counts are exact longs at any corpus
   * size (no packed-lane overflow trick — a lane per counter).
+  *
+  * Nulls: the aggregate counts only NON-NULL inputs — a null hash adds
+  * to neither the bit lanes nor n. That differs from the expression
+  * form on a nullable child, whose n = count(lit(1)) counted null rows
+  * while its sums skipped them, so the bit-identical claim holds for
+  * non-null inputs only. Every caller feeds xxhash64, which is never
+  * null.
   */
 case class SimhashVotes(
     child: Expression,
@@ -42,7 +49,7 @@ case class SimhashVotes(
   override def prettyName: String = "simhash_votes"
   override def children: Seq[Expression] = Seq(child)
 
-  // 64 bit-sum lanes + the non-null row count in slot 64
+  // 64 bit-sum lanes + the non-null row count in slot 64 (see Nulls above)
   override def createAggregationBuffer(): Array[Long] = new Array[Long](65)
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {

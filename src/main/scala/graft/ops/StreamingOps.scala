@@ -86,7 +86,7 @@ object StreamingOps {
   }
 
   /** Transient checkpoint dir under the session-scoped scratch root
-    * (deleted at JVM exit — repeated invocations don't fill /dev/shm). */
+    * (deleted at JVM exit — repeated invocations don't fill java.io.tmpdir). */
   private def ckptDir(name: String): String =
     graft.core.TempDirs.scratch(s"ckpt_$name").toString
 

@@ -358,6 +358,10 @@ object TpcH {
       .join(Tables.region(s, d).where(col("r_name") === "EUROPE"),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name"))
+    // euSupp's two joins into partsupp below rely on s_suppkey being
+    // unique here (r_regionkey and n_nationkey too, for euNations; all
+    // pinned in PlanSpec over the fixture): then the payload join attaches
+    // exactly one supplier row to each partsupp row the semi keeps.
     val euSupp = Tables.supplier(s, d)
       .join(broadcast(euNations), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"),

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -129,14 +129,20 @@ final class Runner(
     if (Files.exists(p)) Some(Files.readString(p)) else None
   }
 
-  private def persistStatus(imp: String, r: StepRun): Unit = {
+  /** Writes a sibling file, then renames it over the record: a concurrent
+    * reader sees the previous record or this one, never a cut-off one. The
+    * sibling's name is unique per process and thread, so two writers of
+    * one impression never share it. */
+  private[pipeline] def persistStatus(imp: String, r: StepRun): Unit = {
     Files.createDirectories(statusDir)
     val fields = Seq(s""""status": "${r.status.name}"""") ++
       r.startedAt.map(t => s""""started_at": $t""") ++
       r.finishedAt.map(t => s""""finished_at": $t""") ++
       r.durationMs.map(d => s""""duration_ms": $d""")
-    Files.write(statusDir.resolve(s"$imp.json"),
-      fields.mkString("{", ", ", "}").getBytes(StandardCharsets.UTF_8))
+    val tmp = statusDir.resolve(
+      s".$imp.${ProcessHandle.current().pid()}.${Thread.currentThread().getId}.tmp")
+    Files.write(tmp, fields.mkString("{", ", ", "}").getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, statusDir.resolve(s"$imp.json"), StandardCopyOption.ATOMIC_MOVE)
   }
 
   private def persistedStatus(imp: String): Option[StepRun] = {

@@ -506,6 +506,18 @@ class PlanSpec extends SparkSpec {
   // checks (no cartesian/nested-loop) instead of failing a stale pin.
   private val estimateBroadcastFixture = sfDir.contains("sf0.001")
 
+  test("tq2: region, nation and supplier keys are unique — euSupp's semi prefilter and payload join rely on it") {
+    import org.apache.spark.sql.functions.col
+    for ((table, key) <- Seq(
+        graft.core.Tables.region(spark, sfDir) -> "r_regionkey",
+        graft.core.Tables.nation(spark, sfDir) -> "n_nationkey",
+        graft.core.Tables.supplier(spark, sfDir) -> "s_suppkey")) {
+      val dup = table.groupBy(col(key)).count().where(col("count") > 1)
+      assert(dup.isEmpty, s"duplicate $key: ${dup.take(5).mkString(", ")}")
+      assert(table.where(col(key).isNull).isEmpty, s"null $key")
+    }
+  }
+
   test("tq5 snowflake: unhinted dims broadcast off estimates at sf0.001 — one shuffled fact join; shuffles at scale by design") {
     val plan = executed(graft.SparkEntry.queries("tq5_local_supplier")(spark, sfDir))
     val all = collectAll(plan)
