@@ -2,7 +2,8 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{ExecutionContext, Future}
 import scala.util.{Failure, Success}
 
@@ -80,8 +81,16 @@ final class HttpApi(runner: Runner, port: Int = 0,
     runnerFactory: Option[org.apache.spark.sql.SparkSession => Runner] = None,
     bindHost: String = "127.0.0.1") {
   private implicit val formats: Formats = DefaultFormats
-  private implicit val ec: ExecutionContext =
-    ExecutionContext.fromExecutor(Executors.newFixedThreadPool(4))
+  // Both pools' threads are non-daemon (an in-flight step finishes before
+  // the JVM exits) and named, so a leaked one is recognizable in a dump;
+  // stop() shuts both down.
+  private def pool(kind: String, n: Int): ExecutorService = {
+    val made = new AtomicInteger()
+    Executors.newFixedThreadPool(n,
+      (r: Runnable) => new Thread(r, s"graft-http-$kind-${made.incrementAndGet()}"))
+  }
+  private val runPool = pool("run", 4)
+  private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(runPool)
 
   private case class RunState(spec: PipelineSpec, roots: Seq[String],
       future: Future[Map[String, String]], runner: Runner)
@@ -112,7 +121,8 @@ final class HttpApi(runner: Runner, port: Int = 0,
   // segment. Exposing beyond localhost is an explicit operator decision
   // (`bindHost = "0.0.0.0"`), not a default.
   private val server = HttpServer.create(new InetSocketAddress(bindHost, port), 0)
-  server.setExecutor(Executors.newFixedThreadPool(8))
+  private val handlerPool = pool("handler", 8)
+  server.setExecutor(handlerPool)
 
   // push-based stage progress for /status (reference polled .done markers)
   private val listener = RunListener.install(runner.session)
@@ -758,5 +768,11 @@ final class HttpApi(runner: Runner, port: Int = 0,
   })
 
   def start(): this.type = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+  /** Stops serving and lets both pools' threads exit once their current
+    * work is done: a submitted run still completes. */
+  def stop(): Unit = {
+    server.stop(0)
+    handlerPool.shutdown()
+    runPool.shutdown()
+  }
 }

@@ -164,18 +164,17 @@ object Graphs {
       .select(col("sa"),
         explode(slice(col("ps"), col("i") + lit(2), size(col("ps")))).as("sb"))
 
-  /** The UNCUT co-occurrence ADJACENCY plan (exposed so tools/R21Plans can
-    * dump the build plan the memo otherwise hides behind a localCheckpoint
-    * scan): per-order basket pairs, bidirected map-side, grouped into each
-    * node's neighbor set in ONE exchange — collect_set dedups exactly like
-    * the former `basketPairs(...).distinct()`, so the derived edge view is
-    * the identical simple graph, but the consumers' re-derivations
-    * disappear (r21, guide §2.4): LPA iterates the adjacency table
+  /** The UNCUT co-occurrence ADJACENCY plan (the memo below cuts it behind
+    * a localCheckpoint): per-order basket pairs, bidirected map-side,
+    * grouped into each node's neighbor set in ONE exchange — collect_set
+    * dedups exactly like the former `basketPairs(...).distinct()`, so the
+    * derived edge view is the identical simple graph, but the consumers'
+    * re-derivations disappear (r21, guide §2.4): LPA iterates the adjacency table
     * directly (its own groupBy is gone), k-core degrees are size(vs) (its
     * degree aggregation and bidirect+repartition are gone), triangles read
     * da = size(vs) map-side (one degree join instead of two, no degree
     * aggregation), and the edge list itself is a map-side explode. */
-  private[graft] def coOccurrenceAdjPlan(s: org.apache.spark.sql.SparkSession,
+  private def coOccurrenceAdjPlan(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
     basketPairs(orderBaskets(s, d))
       .select(explode(array(
@@ -237,14 +236,11 @@ object Graphs {
       else if (round % CheckpointEvery == 0) df.checkpoint(eager = true)
       else df.persist()
 
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    val tStart = System.nanoTime()
-    def el = f"${(System.nanoTime() - tStart) / 1e9}%.1fs"
     // Both edge directions from ONE pass over `pairs`: the former
     // union-of-two-selects re-executed the entire upstream pair plan per
     // branch at persist-materialization time (exchange reuse only saves
-    // the shuffles) — r16 DedupProbe measured the l5e dedup-groups query
-    // at 129.6 s vs 53.6 s for the identical pair join alone at the 100x
+    // the shuffles) — r16 phase isolation measured the l5e dedup-groups
+    // query at 129.6 s vs 53.6 s for the identical pair join alone at the 100x
     // fixture, with the CC loop itself converging in 2 rounds; the
     // duplicated upstream execution WAS the superlinear "CC" term in the
     // r15 decade table (l49/l5f e2 ~ 1.12). The explode emits each pair
@@ -267,7 +263,6 @@ object Graphs {
     var frontier = cached.where(col("component") < col("prev"))
       .select(col("id"), col("component"))
     var changed = cached.where(col("component") < col("prev")).count()
-    if (debug) System.err.println(s"[cc] round=1 changed=$changed t=$el")
     // The frontier's exact row count is known (it IS `changed`), so hint
     // broadcast whenever it provably fits: the per-round edges⋈frontier
     // join then probes the CACHED edge partitions in place — no exchange,
@@ -292,7 +287,6 @@ object Graphs {
         round)
       // labels are monotone decreasing: changed ⟺ strictly smaller
       changed = next.where(col("component") < col("prev")).count()
-      if (debug) System.err.println(s"[cc] round=$round changed=$changed t=$el")
       frontier = next.where(col("component") < col("prev"))
         .select(col("id"), col("component"))
       labels = next.select(col("id"), col("component"))
@@ -438,13 +432,12 @@ object Graphs {
     *    regime (VERDICT r14 #1: idle sf0.1 1.85 s → 3.61 s).
     *  - r15 then exercised the hoist's own claimed win regime —
     *    `autoBroadcastJoinThreshold=-1`, where the per-iteration join must
-    *    shuffle — via tools/NoBroadcastProbe, and the hoist LOSES there
-    *    too (tools/nobroadcast.json: sf0.1 2.28 s hoisted vs 1.36 s lazy;
-    *    10× fixture 6.22 s vs 4.35 s). Two reasons, both visible in the
-    *    probed plans: (a) AQE's stage reuse already dedups the identical
-    *    per-iteration build subtree — the outw aggregation and its
-    *    exchange run ONCE and later iterations read the reused shuffle
-    *    files, which is everything the hoist was supposed to buy; and
+    *    shuffle — and the hoist LOSES there too (tools/nobroadcast.json:
+    *    sf0.1 2.28 s hoisted vs 1.36 s lazy; 10× fixture 6.22 s vs
+    *    4.35 s). Two reasons, both visible in the measured plans:
+    *    (a) AQE's stage reuse already dedups the identical per-iteration
+    *    build subtree — the outw aggregation and its exchange run ONCE
+    *    and later iterations read the reused shuffle files, which is everything the hoist was supposed to buy; and
     *    (b) the eager checkpoint doesn't even keep its side of the
     *    bargain — under AQE the coalesced final plan reports
     *    UnknownPartitioning, so the checkpointed table's src clustering
@@ -454,17 +447,9 @@ object Graphs {
     *
     * `w` and `outw` ride as separate columns (not pre-divided) so the
     * per-edge contribution keeps the exact expression `pr * w / outw` —
-    * bit-identical floats to the oracle's arithmetic.
-    *
-    * The sys-prop override exists ONLY so tools/NoBroadcastProbe can keep
-    * re-measuring the rejected variant against this one; nothing in the
-    * production or declared-query paths sets it. */
-  private def contribEdges(edges: DataFrame): DataFrame = {
-    val joined = edges
-      .join(edges.groupBy(col("src")).agg(sum(col("w")).as("outw")), Seq("src"))
-    if (sys.props.get("graft.graphs.contrib").contains("hoist")) cutBase(joined)
-    else joined
-  }
+    * bit-identical floats to the oracle's arithmetic. */
+  private def contribEdges(edges: DataFrame): DataFrame =
+    edges.join(edges.groupBy(col("src")).agg(sum(col("w")).as("outw")), Seq("src"))
 
   /** L26: PageRank centrality over the customer→supplier order graph
     * (edge weight = lineitems ordered) — 3 damped iterations. Node ids
@@ -572,7 +557,7 @@ object Graphs {
     * adjacency row replaces round 1's join + two aggregations. On a
     * multigraph counts exceed 1 and the shortcut is invalid, so the
     * registry path (arbitrary `edges` input) keeps the generic round.
-    * Measured sf0.1 (tools/R21L40Probe, min of 2, same JVM): declared
+    * Measured sf0.1 (r21, min of 2, same JVM): declared
     * l40 4.00 s → 2.61 s with adjacency rounds + shortcut; output
     * bit-identical (exceptAll both ways = 0). */
   private[graft] def labelPropagation(edges: org.apache.spark.sql.DataFrame,
@@ -599,7 +584,7 @@ object Graphs {
       // one BIGINT to make this a HashAggregate and was REJECTED on
       // measurement: the struct path won all three fresh-JVM pairs at the
       // 100x tier (307/124/201 s vs packed 347/178/288 s) and spilled
-      // LESS (tools/l40_argmax.json, tools/L40ArgmaxProbe). The sort is
+      // LESS (tools/l40_argmax.json). The sort is
       // not the bottleneck: the SortAggregate streams its sorted input
       // with bounded memory and hands the next round already-ordered
       // rows, while the hash map adds per-task state exactly where the

@@ -42,10 +42,6 @@ object TextOps {
       .otherwise(array(array_join(tokens, " ")))
   }
 
-  private def shingleTable(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    tokenized(s, d, wide = true)
-      .select(col("doc_id"), explode(shingles(col("t"))).as("s"))
-
   /** L1: text normalization chain + md5 content fingerprint. */
   val l1Normalize: Q = (s, d) =>
     Tables.documents(s, d)
@@ -126,25 +122,20 @@ object TextOps {
     * exact Jaccard over the capped shingle space — the standard web-dedup
     * approximation (a shingle in >cap docs carries ~no signal for τ ≥ 0.3).
     * `None` (the declared oracle query) is the exact semantics. */
-  def l5JaccardCapped(maxShingleDf: Option[Long]): Q =
-    l5JaccardCapped(maxShingleDf, pairJoinTrapPosture = false)
+  def l5JaccardCapped(maxShingleDf: Option[Long], hashBits: Int = 64): Q =
+    (s, d) => jaccardPairsFrames(Tables.documentsWide(s, d), maxShingleDf, hashBits)
 
-  /** l5 core with the measurement-only trap escape as an explicit parameter
-    * (ADVICE r16: the old -Dgraft.text.pairjoin=trap sys.props escape was
-    * consulted by the DECLARED query at plan-construction time, so a leaked
-    * or concurrently-set property could silently revert l5 to the OOM-prone
-    * static-broadcast posture). Only tools/PairJoinProbe passes `true`, to
-    * re-measure the rejected posture; the declared/bench paths call the
-    * public overload above, which cannot be perturbed by process state. */
-  private[graft] def l5JaccardCapped(
-      maxShingleDf: Option[Long], pairJoinTrapPosture: Boolean,
-      hashBits: Int = 64): Q = (s, d) => {
+  /** The l5 inverted-index pair join over ANY (doc_id, text) frame:
+    * (da < db, jaccard) for every pair at exact shingle-Jaccard ≥ 0.3. The
+    * declared l5/l5e and the pipeline's `dedup_groups` transform all run
+    * this one plan. */
+  private[graft] def jaccardPairsFrames(docs: DataFrame,
+      maxShingleDf: Option[Long] = None, hashBits: Int = 64): DataFrame = {
     // NOTE: the shingle table feeds three subplans (both join sides and the
     // per-doc sizes); persisting it was measured SLOWER cold (the
     // materialization barrier defeats concurrent stage execution), so the
     // subplans recompute — shingle generation is cheap after tokenization.
-    val sh0 = shingleTable(s, d)
-      .select(col("doc_id"), shingleKey(col("s"), hashBits).as("s"))
+    val sh0 = shingleRows(docs, 3, hashBits)
     val sh = maxShingleDf.fold(sh0) { cap =>
       // df pre-aggregation is one extra shuffle over the SAME key the join
       // shuffles on; the semi join then bounds every join bucket at cap²
@@ -152,7 +143,7 @@ object TextOps {
         .where(col("df") <= cap).select(col("s"))
       sh0.join(keep, Seq("s"), "left_semi")
     }
-    // ONE tokenize pass (r16, tools/L5ShareProbe): without this explicit
+    // ONE tokenize pass (measured r16): without this explicit
     // s-keyed repartition, the pair-join exchange (keyed s) and the sizes
     // rollup (keyed doc_id) each re-run tokenize→shingle→hash — the
     // CPU-dominant stage — because their shuffle keys differ and no
@@ -171,8 +162,8 @@ object TextOps {
     val sizes = shR.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = shR.select(col("doc_id").as("da"), col("s"))
     val b = shR.select(col("doc_id").as("db"), col("s"))
-    // SHUFFLE_HASH hint — a 100x-fixture lesson (r15 DecadeRehearsal →
-    // PairJoinProbe): Catalyst's logical size estimate does not grow
+    // SHUFFLE_HASH hint — a 100x-fixture lesson (r15 decade rehearsal,
+    // re-measured r16): Catalyst's logical size estimate does not grow
     // through Generate/explode, so the STATIC planner sees the 26M-row
     // shingle side as broadcastable and plans a BroadcastHashJoin — a
     // single 19-task probe against one giant hash map, and at real corpus
@@ -190,14 +181,8 @@ object TextOps {
     // 8-byte hash);
     // both join sides are the SAME exchange, so the shuffle is written
     // once and reused, and per-partition hash maps stay cache-sized at
-    // any corpus size.
-    // measurement-only escape: `pairJoinTrapPosture` (a package-private
-    // parameter only tools/PairJoinProbe passes) elides the hint so the
-    // probe can re-measure the rejected static-broadcast posture; the
-    // declared/bench paths can't reach it, and PlanSpec pins the hinted
-    // shape.
-    val bSide = if (pairJoinTrapPosture) b else b.hint("shuffle_hash")
-    val inter = a.join(bSide, Seq("s"))
+    // any corpus size. PlanSpec pins the hinted shape.
+    val inter = a.join(b.hint("shuffle_hash"), Seq("s"))
       .where(col("da") < col("db"))
       .groupBy(col("da"), col("db"))
       .agg(count(lit(1)).as("inter"))
@@ -243,21 +228,25 @@ object TextOps {
     * inline before the distinct) — the former prefix SELF-JOIN and its
     * second shuffle of the prefix table are gone — then one
     * verification join against the materialized (doc_id, hs) arrays.
-    * Measured sf0.1 (tools/R21L45Probe, min of 2, same JVM, two runs):
+    * Measured sf0.1 (r21, min of 2, same JVM, two runs):
     * 4.07/4.10 s → 3.46-3.84 s, output bit-identical both runs. */
   val l45PrefixJoin: Q = l45PrefixJoinBits(64)
 
   /** l45 with the [[shingleKey]] `hash_bits` width threaded through the
     * prefix index and the verification arrays (VERDICT r18 #3). */
   private[graft] def l45PrefixJoinBits(hashBits: Int): Q = (s, d) => {
-    val tau = 0.3
+    // τ = 3/10, held once as an exact rational: the positional bound below
+    // needs its integer constants, the prefix length and length filter the
+    // Double
+    val (tauNum, tauDen) = (3L, 10L)
+    val tau = tauNum.toDouble / tauDen
     val docs = hashedShingleDocs(s, d, hashBits) // (doc_id, hs: array<hash>)
     val ex = docs
       .select(col("doc_id"), size(col("hs")).as("n"), explode(col("hs")).as("sv"))
     val dfT = ex.groupBy(col("sv")).agg(count(lit(1)).as("df"))
     // SHUFFLE_HASH — `ex` is the exploded per-shingle table, whose static
-    // size estimate is the pre-explode lie (the l5 trap, r15
-    // PairJoinProbe: 343 s broadcast vs 129 s shuffled at 100x, OOM at
+    // size estimate is the pre-explode lie (the l5 trap, measured r15:
+    // 343 s broadcast vs 129 s shuffled at 100x, OOM at
     // corpus scale). The df attach shuffles on sv (dfT is already
     // sv-keyed from its aggregate, and the two sv exchanges share one
     // shuffle via ReuseExchange).
@@ -296,12 +285,12 @@ object TextOps {
     // over a pair's collisions therefore belong to one token, no prior
     // common token exists before it, and total overlap is bounded by
     // 1 + min(na−pa−1, nb−pb−1). J ≥ τ ⟺ overlap ≥ τ/(1+τ)·(na+nb), and
-    // at τ = 0.3 = 3/10 that is overlap ≥ 3·(na+nb)/13 — checked in EXACT
-    // integer arithmetic (13·ubound ≥ 3·(na+nb)), so no float rounding
-    // can prune a boundary pair. Recall stays 100% by construction; the
-    // groupBy replaces the former `.distinct()` on the same keys (same
-    // exchange), so the filter is free of new shuffles.
-    require(tau == 0.3, "positional filter constants assume tau = 3/10")
+    // at τ = num/den that is overlap ≥ num·(na+nb)/(num+den) — checked in
+    // EXACT integer arithmetic ((num+den)·ubound ≥ num·(na+nb), 13 and 3
+    // at 3/10), so no float rounding can prune a boundary pair. Recall
+    // stays 100% by construction; the groupBy replaces the former
+    // `.distinct()` on the same keys (same exchange), so the filter is
+    // free of new shuffles.
     val cand = buckets
       .select(posexplode(col("ds")).as(Seq("i", "a")), col("ds"))
       .select(col("a.doc_id").as("da"), col("a.n").as("na"), col("a.p").as("pa"),
@@ -320,10 +309,10 @@ object TextOps {
       // further common token lies after the LAST collision in both docs,
       // so overlap ≤ c + min(na−1−max_pa, nb−1−max_pb). Both bounds hold;
       // prune on the tighter one.
-      .where(lit(13L) * least(
+      .where(lit(tauNum + tauDen) * least(
           lit(1L) + least(col("na") - col("pa") - 1, col("nb") - col("pb") - 1),
           col("c") + least(col("na") - col("qa") - 1, col("nb") - col("qb") - 1)) >=
-        lit(3L) * (col("na") + col("nb")))
+        lit(tauNum) * (col("na") + col("nb")))
       .select(col("da"), col("db"))
     cand
       .join(docs.select(col("doc_id").as("da"), col("hs").as("hsa")), Seq("da"))
@@ -458,7 +447,7 @@ object TextOps {
     // SHUFFLE_HASH: the band table is sig ×(numHashes/rowsPerBand) via
     // posexplode, and Catalyst's static size estimate does not grow through
     // Generate — the same lie that broadcast l5's 26M-row shingle side at
-    // 100x (343 s vs 129 s shuffled, r15 PairJoinProbe). The hint pins the
+    // 100x (343 s vs 129 s shuffled, measured r15). The hint pins the
     // shuffle on (band, bh); per-bucket build maps stay bucket-sized.
     val cand = bands.select(col("band"), col("bh"), col("doc_id").as("da"))
       .join(bands.select(col("band"), col("bh"), col("doc_id").as("db"))
@@ -559,11 +548,11 @@ object TextOps {
     * into a primitive long[] buffer and only k·8 bytes per doc cross the
     * shuffle — no per-row k-element array allocations. This is the
     * DECLARED signature path for l5b/l5d since r17: phase isolation
-    * (tools/L5bPhaseProbe, PLANS.md) put l5b's second-decade growth in
+    * (r16, PLANS.md) put l5b's second-decade growth in
     * the 32 per-row `transform` allocations of the array-expression form
     * (2.2 s at 10x → 50-114 s at 100x, an allocation-rate/GC artifact),
     * while this sketch ran the same tiers at 2.48 / 34.8 s
-    * (tools/L5dTierProbe — 2.5× faster at 100x, e2 1.64 → 1.15). */
+    * (r17 tier runs — 2.5× faster at 100x, e2 1.64 → 1.15). */
   private[graft] def minhashSigSketch(
       s: org.apache.spark.sql.SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.MinHashSketch.register(s)
@@ -699,7 +688,7 @@ object TextOps {
     * bucket row lives. Candidate volume is unchanged — Σ per-bucket
     * C(k,2), the multi-index's own bound — and the per-candidate
     * hamming + first-clean-index filters are identical expressions.
-    * Measured sf0.1 (tools/R21L5cProbe, min of 2, same JVM): full query
+    * Measured sf0.1 (r21, min of 2, same JVM): full query
     * 3.11 s → 1.96 s; emitted pairs bit-identical (exceptAll both
     * directions = 0). The doc_id not-null guard reproduces the join
     * form's da < db null-drop exactly. */
@@ -1007,29 +996,12 @@ object TextOps {
 
   /** l5e over ANY (doc_id, text) frame — the pipeline-layer dedup-group
     * step (registry `dedup_groups`, the middle of l50's composed chain):
-    * τ ≥ 0.3 exact-Jaccard pairs through the l5 inverted index (hashed
-    * shingles, candidate buckets bounded by shared-shingle df), then the
-    * [[Graphs.connectedComponents]] loop. Same plan shape as the declared
-    * l5e, parameterized over its input corpus. */
+    * τ ≥ 0.3 exact-Jaccard pairs through the l5 inverted index
+    * ([[jaccardPairsFrames]], the declared l5e's pair join), then the
+    * [[Graphs.connectedComponents]] loop. */
   private[graft] def dedupGroupsFrames(docs: org.apache.spark.sql.DataFrame,
       hashBits: Int = 64): org.apache.spark.sql.DataFrame = {
-    val sh = docs.withColumn("t", toks(col("text")))
-      .select(col("doc_id"), explode(shingles(col("t"))).as("s0"))
-      .select(col("doc_id"), shingleKey(col("s0"), hashBits).as("s"))
-      // same s-keyed exchange sharing as l5JaccardCapped (r16,
-      // tools/L5ShareProbe) — one tokenize pass for all three consumers
-      .repartition(col("s"))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = sh.select(col("doc_id").as("da"), col("s"))
-      // same SHUFFLE_HASH hint as l5JaccardCapped — the static explode
-      // size estimate would broadcast this side too (see l5's comment)
-      .join(sh.select(col("doc_id").as("db"), col("s")).hint("shuffle_hash"), Seq("s"))
-      .where(col("da") < col("db"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), Seq("da"))
-      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
-      .where(col("inter") / (col("na") + col("nb") - col("inter")) >= 0.3)
-      .select(col("da"), col("db"))
+    val pairs = jaccardPairsFrames(docs, hashBits = hashBits).select(col("da"), col("db"))
     Graphs.connectedComponents(docs.select(col("doc_id").as("id")), pairs)
       .select(col("id").as("doc_id"), col("component"))
   }
@@ -1441,17 +1413,16 @@ object TextOps {
       .select(col("doc_id"), shingleKey(col("s"), hashBits).as("s"))
 
   private[graft] def containmentPairsFrames(
-      docs: DataFrame, n: Int, tau: Double, hashBits: Int = 64,
-      shareByCheckpoint: Boolean = true): DataFrame = {
+      docs: DataFrame, n: Int, tau: Double, hashBits: Int = 64): DataFrame = {
     // MATERIALIZED once (eager localCheckpoint): the (doc_id, hash) stream
     // feeds BOTH self-join sides and the per-doc size agg — without it the
     // tokenize+shingle+xxhash CPU pass runs 3×. 16 bytes/row, far smaller
     // than the text it derives from; released via Caches.releaseAll.
     //
     // r18 adjudication of the decade row's then-e2_pure = 1.30 (the table's
-    // one exponent above 1.01): NOT a plan term — L28bPhaseProbe measured
-    // candidate volume exactly linear (22.6M → 226M intermediate pairs for
-    // 10× data) and task CPU ~linear (119 → 1075 cpu-s).
+    // one exponent above 1.01): NOT a plan term — the r18 phase attribution
+    // measured candidate volume exactly linear (22.6M → 226M intermediate
+    // pairs for 10× data) and task CPU ~linear (119 → 1075 cpu-s).
     // r19 CLOSURE (VERDICT r18 #2, tools/l28b_gc.json): the predicted GC
     // term was measured and RULED OUT — JVM collection time is 2-21 s of
     // 70-107 s walls across 3 fresh-JVM rounds at the 100× tier — and the
@@ -1459,29 +1430,24 @@ object TextOps {
     // 2 of 3 adjacent pairs vs 320; no spill to relieve). What remains is
     // the tier's own 1.5× adjacent-cell drift (identical cells 70-107 s):
     // the growth row re-measured e2_pure 1.30 → 1.06 (e2_mixed 1.02), and
-    // min-picking across the probe's 3 rounds lands at 1.01 — linear, with
-    // the residual inside the documented envelope. The l5-style
+    // min-picking across 3 rounds lands at 1.01 — linear, with the
+    // residual inside the documented envelope. The l5-style
     // alternative — share via ONE s-keyed exchange instead of the
-    // checkpoint (`shareByCheckpoint = false`) — won every same-JVM phase
-    // comparison but LOST the fresh-JVM full-query A/B 2-of-3 at 100×
+    // checkpoint — won every same-JVM phase comparison but LOST the
+    // fresh-JVM full-query A/B 2-of-3 at 100×
     // (tools/l28b_posture.json: ckpt 45.2/136.6/90.1 s vs exchange
     // 85.7/118.2/132.9 s; 10× favors the exchange 7.8 vs 13.3 s): its
     // extra doc_id-keyed reshuffle (~3.0 GB vs 1.95 GB shuffle write)
     // costs what the checkpoint's GC costs, with no consistent winner.
-    // No-churn rule: the declared plan keeps the checkpoint; the exchange
-    // posture stays re-measurable here (the L40Argmax convention).
     // SECOND reason the checkpoint stays, found by the trap gate itself
-    // when the exchange default briefly leaked into the declared plan: a
+    // when the exchange posture briefly leaked into the declared plan: a
     // bare repartition(s) leaves the raw exploded side's PRE-EXPLODE size
     // estimate visible through the Generate, and at fixture scale the
     // planner statically BROADCASTS the exchange side — the l5 trap class
     // (corpus-scale driver OOM). l5 dodges it with an explicit
     // shuffle_hash hint; the checkpoint dodges it structurally (truncated
-    // lineage ⇒ honest stats). An adopted exchange posture would need the
-    // hint too.
-    val sh0 = shingleRows(docs, n, hashBits)
-    val sh = if (shareByCheckpoint) sh0.localCheckpoint(eager = true)
-             else sh0.repartition(col("s"))
+    // lineage ⇒ honest stats).
+    val sh = shingleRows(docs, n, hashBits).localCheckpoint(eager = true)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = sh.select(col("doc_id").as("da"), col("s"))
     val b = sh.select(col("doc_id").as("db"), col("s"))
@@ -1498,9 +1464,8 @@ object TextOps {
     * mutual dups keep the smallest doc_id — deterministic without
     * comparing floats). Drop set is doc_id-only → ONE anti-join. */
   private[graft] def containmentDedupFrames(
-      docs: DataFrame, n: Int, tau: Double, hashBits: Int = 64,
-      shareByCheckpoint: Boolean = true): DataFrame = {
-    val dropped = containmentPairsFrames(docs, n, tau, hashBits, shareByCheckpoint)
+      docs: DataFrame, n: Int, tau: Double, hashBits: Int = 64): DataFrame = {
+    val dropped = containmentPairsFrames(docs, n, tau, hashBits)
       .where(col("na") < col("nb") ||
         (col("na") === col("nb") && col("da") > col("db")))
       .select(col("da").as("doc_id")).distinct()
@@ -2281,7 +2246,7 @@ object TextOps {
 
   /** The (pos, sh) CTE pair every shingle-space oracle starts from:
     * distinct 3-gram shingles per doc, whole-text fallback for short docs
-    * — the SQL twin of [[shingleTable]]. */
+    * — the SQL twin of [[shingleRows]]. */
   private val shingleCte =
     """WITH pos AS (SELECT doc_id, t, unnest(range(len(t))) AS i
                     FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),

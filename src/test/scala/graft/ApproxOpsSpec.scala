@@ -418,7 +418,7 @@ class ApproxOpsSpec extends SparkSpec {
   test("native minhash sketch == array-expression form, slot for slot — " +
        "the bit-identity that licenses the declared l5b/l5d sketch path (r17)") {
     // Since r17 the DECLARED l5b routes signatures through MinHashSketch
-    // (2.5x faster at 100x, tools/L5dTierProbe); the array-expression form
+    // (2.5x faster at 100x, measured r17); the array-expression form
     // survives only as this witness. The TypedImperativeAggregate must be
     // bit-identical: same xxhash64(i, h) mixing, so same 32-slot vectors.
     val docs = TextOps.hashedShingleDocs(spark, sfDir)

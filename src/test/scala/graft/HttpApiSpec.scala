@@ -395,6 +395,32 @@ class HttpApiSpec extends SparkSpec {
     } finally { socket.close(); api.stop() }
   }
 
+  test("stop() leaves no non-daemon thread of the server alive, so the JVM can exit") {
+    def nonDaemon(): Set[Thread] = {
+      val ts = new Array[Thread](Thread.activeCount() * 2 + 16)
+      ts.take(Thread.enumerate(ts)).filter(t => t.isAlive && !t.isDaemon).toSet
+    }
+    val before = nonDaemon()
+    val wh = Files.createTempDirectory("graft_api_wh_stop").toString
+    val api = new HttpApi(new Runner(spark, Transforms.standard(), wh)).start()
+    val base = s"http://localhost:${api.boundPort}"
+    try {
+      assert(get(s"$base/ping")._2.contains("Connected"))
+      val (code, body) = post(s"$base/run", s"""{"steps": [{"id": "src",
+        "transform": "source", "params": {"dir": "$sfDir", "table": "nation"}}]}""")
+      assert(code == 202, body)
+      awaitFinished(base, runIdOf(body))
+    } finally api.stop()
+    // the pools' workers exit once their current task is done
+    val deadline = System.currentTimeMillis() + 10000
+    var left = nonDaemon() -- before
+    while (left.nonEmpty && System.currentTimeMillis() < deadline) {
+      Thread.sleep(50)
+      left = nonDaemon() -- before
+    }
+    assert(left.isEmpty, s"alive after stop(): ${left.map(_.getName).toSeq.sorted}")
+  }
+
   private def postBytes(url: String, body: Array[Byte]): (Int, String) = {
     val r = client.send(HttpRequest.newBuilder(URI.create(url))
       .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),

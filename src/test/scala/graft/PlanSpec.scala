@@ -733,7 +733,7 @@ class PlanSpec extends SparkSpec {
 
   test("l26 contribEdges: no eager edge-table materialization in ANY broadcast " +
        "posture; under no-broadcast the build subtree is stage-REUSED across " +
-       "iterations; the probe's hoist override changes no values") {
+       "iterations") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.RDDScanExec
     val edges = spark.range(0, 2000).select(
@@ -784,16 +784,6 @@ class PlanSpec extends SparkSpec {
       sameRanks(df.collect().map(r => (r.getString(0), r.getDouble(1))),
         "the no-broadcast posture")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    // the measurement-only override (tools/NoBroadcastProbe) must stay a
-    // pure materialization choice: identical ranks, hoisted or not
-    sys.props("graft.graphs.contrib") = "hoist"
-    try {
-      val hoisted = graft.ops.Graphs.pageRank(edges, 0.85, 2)
-      assert(outwScans(collectAll(executed(hoisted))).nonEmpty,
-        "the probe's hoist override no longer materializes the edge table")
-      sameRanks(hoisted.collect().map(r => (r.getString(0), r.getDouble(1))),
-        "the probe's hoist override")
-    } finally sys.props.remove("graft.graphs.contrib")
   }
 
   test("l5 pair join: the exploded shingle side is NEVER statically broadcast — " +
@@ -871,15 +861,21 @@ class PlanSpec extends SparkSpec {
 
   test("the trap gate SEES a known-bad plan: l5's unhinted trap posture " +
        "is flagged even when the explode hides under a reused exchange (ADVICE r16)") {
-    // Positive control for the detector itself. The trap posture (shuffle_
-    // hash hint elided via the package-private measurement parameter) is
-    // the shape that ran 343 s vs 129 s at 100x and OOMs at corpus scale;
-    // with the shared repartition(s) exchange, one join side's subtree is
-    // a ReusedExchangeExec — the exact leaf the pre-r17 gate could not see
-    // through. If this stops flagging, the gate has gone blind, not the
-    // plan clean.
-    val trapped = graft.ops.TextOps
-      .l5JaccardCapped(None, pairJoinTrapPosture = true)(spark, sfDir)
+    // Positive control for the detector itself. The trap posture is l5's
+    // self-join of the exploded, repartition(s)-shared shingle table
+    // WITHOUT its shuffle_hash hint — the shape that ran 343 s vs 129 s at
+    // 100x and OOMs at corpus scale; with the shared exchange, one join
+    // side's subtree is a ReusedExchangeExec — the exact leaf the pre-r17
+    // gate could not see through. If this stops flagging, the gate has
+    // gone blind, not the plan clean.
+    import org.apache.spark.sql.functions._
+    val sh = graft.ops.TextOps
+      .shingleRows(graft.core.Tables.documentsWide(spark, sfDir), 3)
+      .repartition(col("s"))
+    val trapped = sh.select(col("doc_id").as("da"), col("s"))
+      .join(sh.select(col("doc_id").as("db"), col("s")), Seq("s"))
+      .where(col("da") < col("db"))
+      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("inter"))
     assert(staticTraps(trapped).nonEmpty,
       "the gate no longer flags l5's known-bad static-broadcast posture " +
         s"— detector regression:\n${trapped.queryExecution.executedPlan}")
@@ -892,10 +888,9 @@ class PlanSpec extends SparkSpec {
        "minhash_sketch aggregate — not the 32-transform array form (r17)") {
     // VERDICT r16 #2: the array-expression form's per-row 32-element
     // transform allocations were the measured second-decade growth term
-    // (50-114 s at 100x vs the sketch's 34.8 s, tools/L5bPhaseProbe /
-    // L5dTierProbe); bit-identity with the sketch is asserted in
-    // ApproxOpsSpec, and this pins that the declared query actually RIDES
-    // the sketch.
+    // (50-114 s at 100x vs the sketch's 34.8 s, measured r16-r17);
+    // bit-identity with the sketch is asserted in ApproxOpsSpec, and this
+    // pins that the declared query actually RIDES the sketch.
     val plan = executed(graft.SparkEntry.queries("l5b_minhash_lsh")(spark, sfDir))
     val hasSketch = collectAll(plan).exists {
       case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec =>

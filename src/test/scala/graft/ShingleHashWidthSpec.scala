@@ -98,9 +98,8 @@ class ShingleHashWidthSpec extends SparkSpec {
   }
 
   test("l5 pair generation: 128-bit path emits the identical pair set") {
-    val w64 = TextOps.l5JaccardCapped(None, pairJoinTrapPosture = false)(spark, sfDir)
-    val w128 = TextOps.l5JaccardCapped(None, pairJoinTrapPosture = false,
-      hashBits = 128)(spark, sfDir)
+    val w64 = TextOps.l5JaccardCapped(None)(spark, sfDir)
+    val w128 = TextOps.l5JaccardCapped(None, hashBits = 128)(spark, sfDir)
     assert(sortedRows(w64) == sortedRows(w128))
     assert(w64.count() > 0)
   }

@@ -129,7 +129,7 @@ object BenchAnchors {
         "sun.util.calendar").map("java.base/" + _))
       .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val T = """.*"t":(-?[0-9.]+),"rows":(-?[0-9]+).*""".r
-    // carry-forward merge (the DecadeRehearsal/PairJoinProbe rule): a
+    // carry-forward merge (the DecadeRehearsal rule): a
     // subset re-anchor run must never erase the rest of the artifact
     val out = Paths.get("tools/bench_anchors.json")
     val prior: Map[String, String] = if (Files.exists(out)) {

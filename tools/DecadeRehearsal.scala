@@ -29,7 +29,7 @@ object DecadeRehearsal {
   // second decade is affordable for). Cheapest-first so an early failure
   // loses the least; the artifact is rewritten after every pick.
   // `--picks a,b,c` runs ONLY the named queries and MERGES into the
-  // existing artifact (the PairJoinProbe rule: re-measure what you name,
+  // existing artifact (re-measure what you name,
   // carry forward what you don't) — added r17 to extend the table to the
   // event-analytics family without re-paying the graph family's hours.
   private val pickNames = Seq(
@@ -186,7 +186,7 @@ object DecadeRehearsal {
 
   /** Child mode: ONE query at ONE (dir, partitions) cell, min of two runs,
     * in a JVM that has done nothing else but the standard sf0.001 warmup
-    * (JIT/classload parity with Bench and PairJoinProbe's fresh-JVM runs). */
+    * (JIT/classload parity with Bench's fresh-JVM anchor runs). */
   private def runCell(name: String, cellIdx: Int, dirs: Array[String]): Unit = {
     val (_, dirIdx, np) = cells(cellIdx)
     val spark = graft.core.Sessions.local()
@@ -271,7 +271,7 @@ object DecadeRehearsal {
       if (tb > 0 && ts > 0) math.log(tb / ts) / math.log(10.0) else -1.0
     val runPicks = picksArg.getOrElse(pickNames)
     // merge: entries in the existing artifact that this invocation does not
-    // re-measure are carried forward verbatim (PairJoinProbe's rule), so a
+    // re-measure are carried forward verbatim, so a
     // --picks subset run never erases the rest of the table
     val out = Paths.get("tools/growth_decades.json")
     val prior: Map[String, String] = if (Files.exists(out)) {

@@ -54,7 +54,7 @@ object ScaleFixture {
       // family) onto ONE task at EVERY tier. That fixture artifact was the
       // dedup family's "superlinear" second decade: linear task CPU, but a
       // serial term growing from a sliver of wall at 10x to dominant at
-      // 100x (tools/L34PhaseProbe r17: avg parallelism 13.7 cores at 10x
+      // 100x (r17 phase attribution: avg parallelism 13.7 cores at 10x
       // -> 3.2 at 100x, GC/spill ~0). Range-partitioning by copy writes
       // `copies` files of CONSTANT size — exactly how a real corpus grows
       // (file count tracks data; splits parallelize the scan by
@@ -113,7 +113,7 @@ object ScaleFixture {
     // (ADVICE r17): a source fixture with ≥1000 distinct labels — or enough
     // copies to overflow the int cast — would silently collide per-copy
     // label universes and break the disjointness that keeps pair volume
-    // exactly linear (the L40ArgmaxProbe bit-budget rule).
+    // exactly linear (the r17 l40 argmax bit-budget rule).
     // getAs[Number] (ADVICE r18): getInt(0) assumed IntegerType — a fixture
     // regenerated with a long/short label column would throw a cast error
     // here instead of reporting the actual guard violation
