@@ -88,6 +88,14 @@ object TextOps {
       .groupBy(sha2(col("text").cast("binary"), 256).as("h"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
+  /** The near-dup Jaccard threshold τ = 3/10, held once as an exact
+    * rational: l45's positional bound needs its integer constants, every
+    * exact-Jaccard filter the Double (3.0 / 10 is the same double as the
+    * oracles' literal 0.3). */
+  private val TauNum = 3L
+  private val TauDen = 10L
+  private val JaccardTau: Double = TauNum.toDouble / TauDen
+
   /** L5: exact shingle-Jaccard near-dup pairs (τ = 0.3) via inverted index:
     * explode shingles → self-join on shingle → count intersections → join
     * per-doc shingle counts. Integer-ratio jaccard ⇒ bit-exact vs DuckDB.
@@ -110,39 +118,18 @@ object TextOps {
     * key in the same shape is the [[shingleKey]] `hash_bits` flag, exposed
     * through the registry's decontaminate/containment_dedup/novelty
     * transforms). */
-  val l5JaccardPairs: Q = l5JaccardCapped(None)
-
-  /** L5 core, with an optional hot-shingle document-frequency cap.
-    *
-    * The inverted-index self-join contributes df² candidate rows per
-    * shingle; a stop-shingle shared by k docs ("in the the") makes one join
-    * bucket quadratic in k on a skewed web corpus. With `maxShingleDf =
-    * Some(cap)`, shingles whose df exceeds the cap are dropped from BOTH
-    * the intersection counts and the per-doc size terms, so the result is
-    * exact Jaccard over the capped shingle space — the standard web-dedup
-    * approximation (a shingle in >cap docs carries ~no signal for τ ≥ 0.3).
-    * `None` (the declared oracle query) is the exact semantics. */
-  def l5JaccardCapped(maxShingleDf: Option[Long], hashBits: Int = 64): Q =
-    (s, d) => jaccardPairsFrames(Tables.documentsWide(s, d), maxShingleDf, hashBits)
+  val l5JaccardPairs: Q = (s, d) => jaccardPairsFrames(Tables.documentsWide(s, d))
 
   /** The l5 inverted-index pair join over ANY (doc_id, text) frame:
-    * (da < db, jaccard) for every pair at exact shingle-Jaccard ≥ 0.3. The
+    * (da < db, jaccard) for every pair at exact shingle-Jaccard ≥ τ. The
     * declared l5/l5e and the pipeline's `dedup_groups` transform all run
     * this one plan. */
   private[graft] def jaccardPairsFrames(docs: DataFrame,
-      maxShingleDf: Option[Long] = None, hashBits: Int = 64): DataFrame = {
+      hashBits: Int = 64): DataFrame = {
     // NOTE: the shingle table feeds three subplans (both join sides and the
     // per-doc sizes); persisting it was measured SLOWER cold (the
     // materialization barrier defeats concurrent stage execution), so the
     // subplans recompute — shingle generation is cheap after tokenization.
-    val sh0 = shingleRows(docs, 3, hashBits)
-    val sh = maxShingleDf.fold(sh0) { cap =>
-      // df pre-aggregation is one extra shuffle over the SAME key the join
-      // shuffles on; the semi join then bounds every join bucket at cap²
-      val keep = sh0.groupBy(col("s")).agg(count(lit(1)).as("df"))
-        .where(col("df") <= cap).select(col("s"))
-      sh0.join(keep, Seq("s"), "left_semi")
-    }
     // ONE tokenize pass (measured r16): without this explicit
     // s-keyed repartition, the pair-join exchange (keyed s) and the sizes
     // rollup (keyed doc_id) each re-run tokenize→shingle→hash — the
@@ -153,12 +140,8 @@ object TextOps {
     // 5.64→4.66 s at 10x, 52.5→48.0 s at 100x (min-of-2, wins at every
     // tier). This shares only the EXCHANGE — lazy, consumers' stages
     // still run concurrently (a persist() barrier here was measured
-    // SLOWER, see the NOTE above). UNCAPPED path only (ADVICE r16): on the
-    // capped path `sh` is already the output of an s-keyed left_semi join
-    // whose input exchanges are reused, so tokenize already runs once there
-    // and an extra repartition(s) would add a full re-shuffle of the
-    // shingle table that the measured wins never covered.
-    val shR = if (maxShingleDf.isEmpty) sh.repartition(col("s")) else sh
+    // SLOWER, see the NOTE above).
+    val shR = shingleRows(docs, 3, hashBits).repartition(col("s"))
     val sizes = shR.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = shR.select(col("doc_id").as("da"), col("s"))
     val b = shR.select(col("doc_id").as("db"), col("s"))
@@ -191,7 +174,7 @@ object TextOps {
       .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
       .withColumn("jaccard",
         col("inter") / (col("na") + col("nb") - col("inter")))
-      .where(col("jaccard") >= 0.3)
+      .where(col("jaccard") >= JaccardTau)
       .select(col("da"), col("db"), col("jaccard"))
   }
 
@@ -235,11 +218,6 @@ object TextOps {
   /** l45 with the [[shingleKey]] `hash_bits` width threaded through the
     * prefix index and the verification arrays (VERDICT r18 #3). */
   private[graft] def l45PrefixJoinBits(hashBits: Int): Q = (s, d) => {
-    // τ = 3/10, held once as an exact rational: the positional bound below
-    // needs its integer constants, the prefix length and length filter the
-    // Double
-    val (tauNum, tauDen) = (3L, 10L)
-    val tau = tauNum.toDouble / tauDen
     val docs = hashedShingleDocs(s, d, hashBits) // (doc_id, hs: array<hash>)
     val ex = docs
       .select(col("doc_id"), size(col("hs")).as("n"), explode(col("hs")).as("sv"))
@@ -265,7 +243,7 @@ object TextOps {
         sort_array(collect_list(struct(col("df"), col("sv")))).as("rs"))
       .select(col("doc_id"), col("n"),
         posexplode(slice(col("rs"), lit(1),
-          (col("n") - ceil(lit(tau) * col("n")) + lit(1)).cast("int")))
+          (col("n") - ceil(lit(JaccardTau) * col("n")) + lit(1)).cast("int")))
           .as(Seq("p", "r")))
       .select(col("r.sv").as("sv"), col("doc_id"), col("n"), col("p"))
     // prefix-shingle buckets grouped once; candidates emitted map-side
@@ -297,7 +275,8 @@ object TextOps {
         explode(slice(col("ds"), col("i") + lit(2), size(col("ds")))).as("b"))
       .select(col("da"), col("na"), col("pa"),
         col("b.doc_id").as("db"), col("b.n").as("nb"), col("b.p").as("pb"))
-      .where(col("na") >= lit(tau) * col("nb") && col("nb") >= lit(tau) * col("na"))
+      .where(col("na") >= lit(JaccardTau) * col("nb") &&
+        col("nb") >= lit(JaccardTau) * col("na"))
       .groupBy(col("da"), col("db"))
       .agg(first(col("na")).as("na"), first(col("nb")).as("nb"),
         min(col("pa")).as("pa"), min(col("pb")).as("pb"),
@@ -309,20 +288,29 @@ object TextOps {
       // further common token lies after the LAST collision in both docs,
       // so overlap ≤ c + min(na−1−max_pa, nb−1−max_pb). Both bounds hold;
       // prune on the tighter one.
-      .where(lit(tauNum + tauDen) * least(
+      .where(lit(TauNum + TauDen) * least(
           lit(1L) + least(col("na") - col("pa") - 1, col("nb") - col("pb") - 1),
           col("c") + least(col("na") - col("qa") - 1, col("nb") - col("qb") - 1)) >=
-        lit(tauNum) * (col("na") + col("nb")))
+        lit(TauNum) * (col("na") + col("nb")))
       .select(col("da"), col("db"))
+    exactJaccardVerify(cand, "da", "db", docs, docs)
+  }
+
+  /** Exact Jaccard verification of candidate pairs over per-doc
+    * hashed-shingle arrays — the one verifier behind l45, l5b/l5d and l27:
+    * attach both sides' `(doc_id, hs)` arrays to the `(ka, kb)` candidate
+    * ids, intersect in place (no explode, no shuffle of an inverted
+    * index), and keep `(ka, kb, jaccard)` at τ or above. */
+  private def exactJaccardVerify(cand: DataFrame, ka: String, kb: String,
+      docsA: DataFrame, docsB: DataFrame): DataFrame =
     cand
-      .join(docs.select(col("doc_id").as("da"), col("hs").as("hsa")), Seq("da"))
-      .join(docs.select(col("doc_id").as("db"), col("hs").as("hsb")), Seq("db"))
+      .join(docsA.select(col("doc_id").as(ka), col("hs").as("hsa")), Seq(ka))
+      .join(docsB.select(col("doc_id").as(kb), col("hs").as("hsb")), Seq(kb))
       .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
       .withColumn("jaccard",
         col("inter") / (size(col("hsa")) + size(col("hsb")) - col("inter")))
-      .where(col("jaccard") >= tau)
-      .select(col("da"), col("db"), col("jaccard"))
-  }
+      .where(col("jaccard") >= JaccardTau)
+      .select(col(ka), col(kb), col("jaccard"))
 
   /** l47 core over ANY (doc_id, text) frame: exact phrase search via a
     * POSITIONAL inverted index — the "find this exact quote" primitive
@@ -388,12 +376,6 @@ object TextOps {
 
   val l48OovRate: Q = (s, d) => oovRateFrames(Tables.documents(s, d), 20)
 
-  /** L5b: MinHash + LSH banding — the sub-quadratic scale path for near-dup.
-    * 32 xxhash64 permutations → 16 bands × 2 rows → band-bucket join yields
-    * candidates, which are then exact-verified at τ = 0.3 — so the output
-    * is exactly {pairs with true Jaccard ≥ 0.3 that banded together}, and
-    * the driver hash-checks it against the exact-pair oracle (full recall
-    * on the fixtures; candidate ⊆ l5 output asserted in ScalaTest). */
   /** Docs with per-doc hashed-shingle arrays (shared by the minhash paths).
     *
     * MATERIALIZED once per invocation (eager localCheckpoint): the frame
@@ -404,8 +386,9 @@ object TextOps {
     * signature index a 100 TB dedup run builds once anyway, never the text.
     * (The l5 inverted-index path deliberately does NOT persist its exploded
     * shingle table: that one is shuffle-bound, and the barrier was measured
-    * slower; this one is compute-bound and wins.) */
-  /** `hashBits` widens the per-doc hashed-shingle arrays (the [[shingleKey]]
+    * slower; this one is compute-bound and wins.)
+    *
+    * `hashBits` widens the per-doc hashed-shingle arrays (the [[shingleKey]]
     * flag — 128 stores 16-byte binary elements; array_intersect and the
     * (df, hash) orderings work on BinaryType natively). The minhash/simhash
     * callers stay at 64 BY CONSTRUCTION: their permutation mixing
@@ -421,31 +404,24 @@ object TextOps {
         transform(col("sh"), sv => shingleKey(sv, hashBits)).as("hs"))
       .localCheckpoint(eager = true)
 
+  /** Minhash signature length: 32 slots, banded as 16 bands × 2 rows. */
+  private val MinhashSlots = 32
+
+  /** LSH bands of (doc_id, sig) minhash signatures: one (band, bh) row per
+    * band, bh = xxhash64 of the band's two signature slots. */
+  private def minhashBands(sig: DataFrame): DataFrame = sig.select(
+    col("doc_id"),
+    posexplode(transform(sequence(lit(0), lit(MinhashSlots / 2 - 1)), b =>
+      xxhash64(lit("band"), element_at(col("sig"), b * 2 + 1),
+        element_at(col("sig"), b * 2 + 2)))).as(Seq("band", "bh")))
+
   /** LSH banding + exact candidate verification, given per-doc signatures.
     * Candidates collide in any band; the few survivors are exactly verified
-    * by intersecting the per-doc hashed-shingle ARRAYS in place — no
-    * explode, no extra shuffle of the full inverted index. */
-  private[graft] def minhashBandsVerify(
-      docs: DataFrame, sig: DataFrame, numHashes: Int, rowsPerBand: Int,
-      maxBucket: Option[Long] = None): DataFrame = {
-    val bands0 = sig.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(numHashes / rowsPerBand - 1)), b =>
-        xxhash64(lit("band"), element_at(col("sig"), b * rowsPerBand + 1),
-          element_at(col("sig"), b * rowsPerBand + 2)))).as(Seq("band", "bh")))
-    // Optional hot-bucket cap: a degenerate band value shared by k docs
-    // (near-identical boilerplate corpora) contributes k² candidate rows;
-    // dropping buckets over the cap bounds the band self-join the same way
-    // the l5 shingle-df cap bounds the inverted index. Candidates only
-    // shrink, so the candidate ⊆ exact-pairs contract is preserved.
-    val bands = maxBucket.fold(bands0) { cap =>
-      val keep = bands0.groupBy(col("band"), col("bh"))
-        .agg(count(lit(1)).as("bn"))
-        .where(col("bn") <= cap).select(col("band"), col("bh"))
-      bands0.join(keep, Seq("band", "bh"), "left_semi")
-    }
-    // SHUFFLE_HASH: the band table is sig ×(numHashes/rowsPerBand) via
-    // posexplode, and Catalyst's static size estimate does not grow through
+    * by [[exactJaccardVerify]]. */
+  private[graft] def minhashBandsVerify(docs: DataFrame, sig: DataFrame): DataFrame = {
+    val bands = minhashBands(sig)
+    // SHUFFLE_HASH: the band table is sig ×16 via posexplode, and
+    // Catalyst's static size estimate does not grow through
     // Generate — the same lie that broadcast l5's 26M-row shingle side at
     // 100x (343 s vs 129 s shuffled, measured r15). The hint pins the
     // shuffle on (band, bh); per-bucket build maps stay bucket-sized.
@@ -454,17 +430,37 @@ object TextOps {
         .hint("shuffle_hash"), Seq("band", "bh"))
       .where(col("da") < col("db"))
       .select(col("da"), col("db")).distinct()
-    val withA = cand.join(
-      docs.select(col("doc_id").as("da"), col("hs").as("hsa")), Seq("da"))
-    withA.join(docs.select(col("doc_id").as("db"), col("hs").as("hsb")), Seq("db"))
-      .withColumn("inter", size(array_intersect(col("hsa"), col("hsb"))))
-      .withColumn("jaccard",
-        col("inter") / (size(col("hsa")) + size(col("hsb")) - col("inter")))
-      .where(col("jaccard") >= 0.3)
-      .select(col("da"), col("db"), col("jaccard"))
+    exactJaccardVerify(cand, "da", "db", docs, docs)
   }
 
-  val l5bMinhashLsh: Q = l5bMinhashLshCapped(None)
+  /** L5b: MinHash + LSH banding — the sub-quadratic scale path for near-dup.
+    * 32 xxhash64 permutations → 16 bands × 2 rows → band-bucket join yields
+    * candidates, which are then exact-verified at τ = 0.3 — so the output
+    * is exactly {pairs with true Jaccard ≥ 0.3 that banded together}, and
+    * Verify hash-checks it against the exact-pair oracle (full recall
+    * on the fixtures; candidate ⊆ l5 output asserted in ScalaTest).
+    * Signatures route through the native sketch aggregate (r17, VERDICT
+    * r16 #2) — bit-identical to the array form by construction (same
+    * xxhash64(i, h) mixing; asserted slot-for-slot in ScalaTest), so the
+    * output is unchanged and the exact-pair oracle is the
+    * regression gate. */
+  val l5bMinhashLsh: Q = (s, d) => {
+    // Shingle strings are hashed to longs ONCE (hashedShingleDocs); the 32
+    // "permutations" mix the precomputed long (xxhash64 over an 8-byte
+    // input) inside the sketch's update loop — 32× less string hashing,
+    // identical minhash statistics.
+    val docs = hashedShingleDocs(s, d)
+    minhashBandsVerify(docs, minhashSigSketch(s, docs))
+  }
+
+  /** L5d: the same minhash-LSH search declared from the sketch-aggregate
+    * formulation's own registry slot. Since r17 l5b and l5d share the
+    * [[minhashSigSketch]] signature path (the array-expression form l5b
+    * used to carry is the slower twin at scale — see minhashSigSketch's
+    * numbers — and survives only as the equivalence witness), so the two
+    * declared queries are one function; both stay declared because each
+    * ID is a SURVEY §2 operator with its own oracle history. */
+  val l5dMinhashAgg: Q = l5bMinhashLsh
 
   /** L27: INCREMENTAL dedup — a new document batch deduped against a
     * PERSISTED minhash band index of the historical corpus, the
@@ -480,18 +476,12 @@ object TextOps {
     * fixtures and candidates are exact-verified (the l5b argument), so
     * the output equals the exact new×old Jaccard pairs at τ = 0.3. */
   val l27IncrementalDedup: Q = (s, d) => {
-    val numHashes = 32
     val docs = hashedShingleDocs(s, d)
     // signatures via the native sketch aggregate (r17, with l5b/l5d —
     // bit-identical to the array form, see minhashSigSketch): the history
     // index build is the 100 TB-side pass, exactly where the array form's
     // per-row 32-transform allocation cost was measured to blow up
-    def sigOf(in: DataFrame): DataFrame = minhashSigSketch(s, in)
-    def bandsOf(sig: DataFrame): DataFrame = sig.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(numHashes / 2 - 1)), b =>
-        xxhash64(lit("band"), element_at(col("sig"), b * 2 + 1),
-          element_at(col("sig"), b * 2 + 2)))).as(Seq("band", "bh")))
+    def bandsOf(in: DataFrame): DataFrame = minhashBands(minhashSigSketch(s, in))
     val hist = docs.where(col("doc_id") % 10 =!= 0)
     val batch = docs.where(col("doc_id") % 10 === 0)
     // the nightly artifact: band index + shingle store, persisted once per
@@ -506,7 +496,7 @@ object TextOps {
     val shDir = graft.core.TempDirs.scratchSlot(s"mh_shingle_store_$slot").toString
     val fp = graft.core.Fingerprint.of(Tables.path(d, "documents"))
     if (indexBuilt.get(d) != fp) {
-      bandsOf(sigOf(hist)).write.mode("overwrite").parquet(idxDir)
+      bandsOf(hist).write.mode("overwrite").parquet(idxDir)
       hist.select(col("doc_id"), col("hs")).write.mode("overwrite").parquet(shDir)
       indexBuilt.put(d, fp)
     }
@@ -519,21 +509,13 @@ object TextOps {
     // the planner would broadcast "a daily crawl ×16" (TB-scale in
     // production) against the history index. Shuffling on (band, bh)
     // co-partitions the probe with the index's own layout instead.
-    val cand = bandsOf(sigOf(batch))
+    val cand = bandsOf(batch)
       .select(col("band"), col("bh"), col("doc_id").as("new_id"))
       .hint("shuffle_hash")
       .join(idx.select(col("band"), col("bh"), col("doc_id").as("old_id")),
         Seq("band", "bh"))
       .select(col("new_id"), col("old_id")).distinct()
-    cand
-      .join(batch.select(col("doc_id").as("new_id"), col("hs").as("hsn")), Seq("new_id"))
-      .join(store.select(col("doc_id").as("old_id"), col("hs").as("hso")),
-        Seq("old_id"))
-      .withColumn("inter", size(array_intersect(col("hsn"), col("hso"))))
-      .withColumn("jaccard",
-        col("inter") / (size(col("hsn")) + size(col("hso")) - col("inter")))
-      .where(col("jaccard") >= 0.3)
-      .select(col("new_id"), col("old_id"), col("jaccard"))
+    exactJaccardVerify(cand, "new_id", "old_id", batch, store)
   }
 
   /** l27's index-built memo: dir → documents-fingerprint the persisted
@@ -567,42 +549,12 @@ object TextOps {
     * [[minhashSigSketch]]'s slot for slot, which is what licenses the
     * declared queries to ride the faster sketch while hash-checking
     * against the same exact-pair oracle. Not used by any declared path. */
-  private[graft] def minhashSigArrayForm(
-      docs: DataFrame, numHashes: Int = 32): DataFrame =
+  private[graft] def minhashSigArrayForm(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
-      array((0 until numHashes).map { i =>
+      array((0 until MinhashSlots).map { i =>
         array_min(transform(col("hs"), h => xxhash64(lit(i), h)))
       }: _*).as("sig"))
-
-  /** l5b core with the optional hot-bucket cap (see minhashBandsVerify).
-    * Signatures route through the native sketch aggregate (r17, VERDICT
-    * r16 #2) — bit-identical to the array form by construction (same
-    * xxhash64(i, h) mixing; asserted slot-for-slot in ScalaTest), so the
-    * output is unchanged and the driver's exact-pair oracle is the
-    * regression gate. */
-  def l5bMinhashLshCapped(maxBucket: Option[Long]): Q = (s, d) => {
-    // Shingle strings are hashed to longs ONCE (hashedShingleDocs); the 32
-    // "permutations" mix the precomputed long (xxhash64 over an 8-byte
-    // input) inside the sketch's update loop — 32× less string hashing,
-    // identical minhash statistics.
-    val docs = hashedShingleDocs(s, d)
-    minhashBandsVerify(docs, minhashSigSketch(s, docs),
-      numHashes = 32, rowsPerBand = 2, maxBucket)
-  }
-
-  /** L5d: the same minhash-LSH search declared from the sketch-aggregate
-    * formulation's own registry slot. Since r17 l5b and l5d share the
-    * [[minhashSigSketch]] signature path (the array-expression form l5b
-    * used to carry is the slower twin at scale — see minhashSigSketch's
-    * numbers — and survives only as the equivalence witness), so the two
-    * declared queries are plan-identical; both stay declared because each
-    * ID is a SURVEY §2 operator with its own oracle history. */
-  val l5dMinhashAgg: Q = (s, d) => {
-    val docs = hashedShingleDocs(s, d)
-    minhashBandsVerify(docs, minhashSigSketch(s, docs),
-      numHashes = 32, rowsPerBand = 2)
-  }
 
   /** L5c: SimHash (64-bit, from xxhash64 token hashes) + near-pair search by
     * hamming distance ≤ 6, blocked by MULTI-INDEX byte-pair probing (the
@@ -626,21 +578,7 @@ object TextOps {
     * row count has orders of magnitude fewer true near-dups; the plan's
     * cost tracks the duplicate mass, which is exactly what a blocked
     * near-dup join should do. */
-  val l5cSimhash: Q = l5cSimhashCapped(None)
-
-  /** l5c core with the optional hot-bucket cap — same `left_semi` pattern
-    * as the l5 shingle-df cap and the l5b band cap: a boilerplate-heavy
-    * corpus (identical headers → identical byte-pairs) makes one 16-bit
-    * bucket quadratic; dropping buckets over the cap bounds every band
-    * self-join at cap². `None` is the declared EXACT mode (the completeness
-    * contract — pigeonhole over all 28 indexes — holds only there, and it
-    * keeps the exchange-free exactly-once emission). With a cap, a pair's
-    * first clean index may be a dropped bucket while a later one survives,
-    * so emission falls back to an explicit dedup over the (already capped,
-    * bounded) candidate set — the dedup exchange is the price of the cap,
-    * not of the default path. */
-  def l5cSimhashCapped(maxBucket: Option[Long]): Q = (s, d) =>
-    l5cPairs(l5cSketch(s, d), maxBucket)
+  val l5cSimhash: Q = (s, d) => l5cPairs(l5cSketch(s, d))
 
   /** The (doc_id, simhash) sketch — 16 bytes per doc, materialized once
     * (both band self-join sides and the summary's brute twin read it). */
@@ -692,8 +630,7 @@ object TextOps {
     * 3.11 s → 1.96 s; emitted pairs bit-identical (exceptAll both
     * directions = 0). The doc_id not-null guard reproduces the join
     * form's da < db null-drop exactly. */
-  private def l5cPairs(sim: org.apache.spark.sql.DataFrame,
-      maxBucket: Option[Long]): org.apache.spark.sql.DataFrame = {
+  private def l5cPairs(sim: DataFrame): DataFrame = {
     def chunk(i: Int): Column =
       shiftright(col("simhash"), i * 8).bitwiseAND(0xff)
     val chunkPairs = for { i <- 0 until 8; j <- i + 1 until 8 } yield (i, j)
@@ -702,16 +639,12 @@ object TextOps {
       posexplode(array(chunkPairs.map { case (i, j) =>
         shiftleft(chunk(i), 8).bitwiseOR(chunk(j))
       }: _*)).as(Seq("band_idx", "band")))
-    // one exchange: bucket the banded sketch; the optional hot-bucket cap
-    // is now a plain size filter on the bucket array (the former
-    // aggregate + left_semi pair of operators)
-    val buckets0 = banded
+    // one exchange: bucket the banded sketch
+    val buckets = banded
       .groupBy(col("band_idx"), col("band"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash"))))
         .as("ds"))
       .where(size(col("ds")) >= 2)
-    val buckets = maxBucket.fold(buckets0)(cap =>
-      buckets0.where(size(col("ds")) <= cap))
     // Duplicate-free emission, no distinct: a near-identical pair collides
     // in up to 28 indexes, so deduping by shuffle would move ~28× the
     // qualifying pairs. Both hashes are in hand after the suffix-slice
@@ -725,7 +658,7 @@ object TextOps {
       case (((i, j), idx), acc) =>
         when(byteClean(i) && byteClean(j), lit(idx)).otherwise(acc)
     }
-    val expanded = buckets
+    buckets
       .select(col("band_idx"), posexplode(col("ds")).as(Seq("i", "a")), col("ds"))
       .select(col("band_idx"),
         col("a.doc_id").as("da"), col("a.simhash").as("ha"),
@@ -733,17 +666,8 @@ object TextOps {
       .select(col("band_idx"), col("da"), col("ha"),
         col("b.doc_id").as("db"), col("b.simhash").as("hb"))
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
-    maxBucket match {
-      case None =>
-        expanded.where(col("hamming") <= 6 && col("band_idx") === firstCleanIdx)
-          .select(col("da"), col("db"), col("hamming"))
-      case Some(_) =>
-        // capped: the first clean index may have been a dropped bucket, so
-        // exactly-once-by-construction doesn't apply — dedup the bounded
-        // candidate set instead
-        expanded.where(col("hamming") <= 6)
-          .select(col("da"), col("db"), col("hamming")).distinct()
-    }
+      .where(col("hamming") <= 6 && col("band_idx") === firstCleanIdx)
+      .select(col("da"), col("db"), col("hamming"))
   }
 
   /** Driver-verifiable property summary for l5c (the annSummary pattern,
@@ -788,7 +712,7 @@ object TextOps {
     // one cheap count over the 16-byte checkpointed sketch sizes the
     // stride; deterministic for a given corpus (no sampling randomness)
     val L5cSampleMod = l5cSampleMod(sim.count(), sampleBudget)
-    val pairs = l5cPairs(sim, None).localCheckpoint(eager = true)
+    val pairs = l5cPairs(sim).localCheckpoint(eager = true)
     val stats = pairs.agg(
       count(lit(1)).as("n_pairs"),
       coalesce(sum(when(col("da") >= col("db"), 1L).otherwise(0L)), lit(0L))
@@ -1656,8 +1580,7 @@ object TextOps {
     * stable declared query — sf0.001/0.01 have none). Distinct (source,
     * shingle-hash) pairs first — so join buckets per shingle are bounded
     * by the SOURCE count, not document frequency — then one self-join on
-    * the 8-byte hash and a source-pair count; output is #sources² rows.
-    * With thousands of sources the l5 df-cap argument applies unchanged. */
+    * the 8-byte hash and a source-pair count; output is #sources² rows. */
   val l34SourceOverlap: Q = (s, d) =>
     sourceOverlapFrames(Tables.documentsWide(s, d))
 

@@ -277,107 +277,6 @@ class ApproxOpsSpec extends SparkSpec {
       s"banded=${gotPairs.size} exact=${exactPairs.size}; missing=${(exactPairs -- gotPairs).take(3)}")
   }
 
-  test("l5 hot-shingle df cap bounds inverted-index buckets on a skewed corpus") {
-    // synthetic skewed corpus: every doc shares one boilerplate shingle
-    // ("copyright acme corp"); without the cap that single shingle makes the
-    // self-join bucket n² — the round-1 scale concern
-    import spark.implicits._
-    val n = 200
-    val docs = (1 to n).map { i =>
-      (i.toLong, s"copyright acme corp unique$i text$i body$i tail$i", "en", "web", 40L)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-    // with the cap ON, the join input has no shingle above the cap
-    val cap = 10L
-    val capped = TextOps.l5JaccardCapped(Some(cap))(spark, dir)
-    val uncapped = TextOps.l5JaccardCapped(None)(spark, dir)
-    // all real near-dup pairs here come only from the boilerplate shingle
-    // (docs are otherwise unique), so capping leaves no qualifying pair,
-    // while the uncapped path must grind through the n² bucket
-    assert(pairSet(capped, "da", "db").subsetOf(pairSet(uncapped, "da", "db")))
-    // the bound itself: max df of any shingle actually joined is <= cap
-    val sh = graft.core.Tables.documents(spark, dir)
-      .withColumn("t", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(t) - 2), i -> " +
-          "concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2))))"))
-        .as("s"))
-    val dfCounts = sh.groupBy("s").count()
-    assert(dfCounts.agg(max("count")).head().getLong(0) == n.toLong,
-      "skew fixture should contain an n-hot shingle")
-    val cappedMax = dfCounts.where(col("count") <= cap).agg(max("count")).head().getLong(0)
-    assert(cappedMax <= cap)
-    // fixture-scale parity: on the real corpus a cap ABOVE the max df
-    // changes nothing — the declared (uncapped) oracle query stays exact
-    val fixtureExact = pairSet(TextOps.l5JaccardPairs(spark, sfDir), "da", "db")
-    val fixtureHighCap =
-      pairSet(TextOps.l5JaccardCapped(Some(1000000L))(spark, sfDir), "da", "db")
-    assert(fixtureHighCap == fixtureExact)
-  }
-
-  test("l5b hot-bucket cap keeps candidates a subset of exact pairs") {
-    val exact = pairSet(TextOps.l5JaccardPairs(spark, sfDir), "da", "db")
-    val capped = pairSet(
-      TextOps.l5bMinhashLshCapped(Some(50L))(spark, sfDir), "da", "db")
-    assert((capped -- exact).isEmpty)
-    // a generous cap must not cost recall on the fixture corpus
-    val uncapped = pairSet(TextOps.l5bMinhashLsh(spark, sfDir), "da", "db")
-    assert(pairSet(TextOps.l5bMinhashLshCapped(Some(1000000L))(spark, sfDir),
-      "da", "db") == uncapped)
-  }
-
-  test("l5c hot-bucket cap bounds band buckets on a boilerplate corpus") {
-    // synthetic boilerplate corpus: many docs share their ENTIRE text
-    // except one trailing token, so their simhashes agree on most bytes and
-    // pile into the same byte-pair buckets — the quadratic corner the cap
-    // exists for. Plus unique filler docs that land in sparse buckets.
-    import spark.implicits._
-    val boiler = "terms of service copyright acme corp all rights reserved " +
-      "no warranty of any kind applies to this document whatsoever"
-    val docs = ((1 to 120).map { i =>
-      (i.toLong, s"$boiler v$i", "en", "web", 100L)
-    } ++ (200 to 260).map { i =>
-      (i.toLong, s"unique$i totally different body$i content$i tail$i end$i", "en", "web", 50L)
-    }).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_simhash_skew").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-    val cap = 20L
-    val capped = pairSet(TextOps.l5cSimhashCapped(Some(cap))(spark, dir), "da", "db")
-    val uncapped = pairSet(TextOps.l5cSimhashCapped(None)(spark, dir), "da", "db")
-    // candidates only shrink under the cap
-    assert(capped.subsetOf(uncapped), s"capped added pairs: ${(capped -- uncapped).take(3)}")
-    // the fixture really is skewed: some byte-pair bucket exceeds the cap
-    // uncapped, and the capped band table is bounded at cap everywhere
-    val tokens = graft.core.Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val bitCols = (0 until 64).map { bit =>
-      sum(shiftright(col("h"), bit).bitwiseAND(1)).as(s"s$bit")
-    }
-    val votes = tokens.groupBy(col("doc_id")).agg(count(lit(1)).as("n"), bitCols: _*)
-    val sim = votes.select(col("doc_id"),
-      (0 until 64).map { bit =>
-        when(col(s"s$bit") * 2 > col("n"), shiftleft(lit(1L), bit)).otherwise(lit(0L))
-      }.reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
-    def chunk(i: Int): org.apache.spark.sql.Column =
-      shiftright(col("simhash"), i * 8).bitwiseAND(0xff)
-    val cps = for { i <- 0 until 8; j <- i + 1 until 8 } yield (i, j)
-    val bands = sim.select(col("doc_id"), posexplode(array(cps.map { case (i, j) =>
-      shiftleft(chunk(i), 8).bitwiseOR(chunk(j))
-    }: _*)).as(Seq("band_idx", "band")))
-    val counts = bands.groupBy("band_idx", "band").count()
-    assert(counts.agg(max("count")).head().getLong(0) > cap,
-      "skew fixture should overflow at least one byte-pair bucket")
-    val cappedMax = counts.where(col("count") <= cap).agg(max("count")).head().getLong(0)
-    assert(cappedMax <= cap)
-    // fixture-scale parity: a cap above every bucket count changes nothing
-    assert(pairSet(TextOps.l5cSimhashCapped(Some(1000000L))(spark, sfDir), "da", "db")
-      == pairSet(TextOps.l5cSimhash(spark, sfDir), "da", "db"))
-  }
-
   test("l5c multi-index blocking shrinks bucket occupancy vs single-byte bands") {
     // the scale property behind the redesign: the 16-bit byte-pair indexes
     // spread the corpus over 2^16 buckets per index vs 2^8 for single-byte
@@ -436,7 +335,7 @@ class ApproxOpsSpec extends SparkSpec {
     // (sketch path) emits exactly the pairs the array-form path did
     val b = pairSet(TextOps.l5bMinhashLsh(spark, sfDir), "da", "db")
     val arrPairs = pairSet(TextOps.minhashBandsVerify(
-      docs, TextOps.minhashSigArrayForm(docs), 32, 2, None), "da", "db")
+      docs, TextOps.minhashSigArrayForm(docs)), "da", "db")
     assert(b.nonEmpty && arrPairs == b,
       s"sketch-path pairs != array-path pairs; only-sketch=${(b -- arrPairs).take(3)} only-array=${(arrPairs -- b).take(3)}")
   }

@@ -98,8 +98,9 @@ class ShingleHashWidthSpec extends SparkSpec {
   }
 
   test("l5 pair generation: 128-bit path emits the identical pair set") {
-    val w64 = TextOps.l5JaccardCapped(None)(spark, sfDir)
-    val w128 = TextOps.l5JaccardCapped(None, hashBits = 128)(spark, sfDir)
+    val w64 = TextOps.l5JaccardPairs(spark, sfDir)
+    val w128 = TextOps.jaccardPairsFrames(
+      Tables.documentsWide(spark, sfDir), hashBits = 128)
     assert(sortedRows(w64) == sortedRows(w128))
     assert(w64.count() > 0)
   }

@@ -5,8 +5,7 @@ import graft.ops.VectorOps
 
 /** Declared contract for the hot-label capped vector variants (l6c/l7e)
   * and the skew bound that motivates them: a label holding half the corpus
-  * must not make the "exact" pair operators quadratic. Companion of the l5
-  * hot-shingle df-cap (`l5JaccardCapped`). */
+  * must not make the "exact" pair operators quadratic. */
 class VectorSkewSpec extends SparkSpec {
 
   /** Fixture embeddings with an adversarial label distribution: one label

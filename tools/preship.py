@@ -62,26 +62,56 @@ TOP_TYPE = re.compile(
     re.M)
 
 
-def registry_keys(path):
-    """Declared-query keys in a file: `"name" -> impl` pairs inside its
-    queries/registry map(s). The oracle map uses the same keys, so a raw
-    findall over-collects only if a key string appears outside any map —
-    acceptable for a gate (over-verification is safe)."""
-    try:
-        with open(os.path.join(REPO, path)) as f:
-            src = f.read()
-    except FileNotFoundError:
-        return set(), set()
+# the declared-query registry: `val queries: Map[String, Q] = Map(`
+QUERIES_MAP = re.compile(r'val\s+queries\s*:\s*Map\[String,.*?\]\s*=\s*Map\(', re.S)
+
+
+def queries_body(src):
+    """The source between a file's `val queries: Map[String, ...] = Map(`
+    and its matching `)`, or None if it declares no such map. String
+    literals are skipped so a paren inside one cannot end the body."""
+    m = QUERIES_MAP.search(src)
+    if not m:
+        return None
+    depth, i = 1, m.end()
+    while i < len(src) and depth:
+        if src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            i = len(src) if j < 0 else j + 3
+            continue
+        c = src[i]
+        if c == '"':
+            i += 1
+            while i < len(src) and src[i] != '"':
+                i += 2 if src[i] == '\\' else 1
+        elif c == '(':
+            depth += 1
+        elif c == ')':
+            depth -= 1
+        i += 1
+    return src[m.end():i - 1]
+
+
+def parse_registry(src):
+    """(declared-query keys, top-level type names) of one Scala source.
+    Keys are the `"name" -> impl` pairs inside the `val queries` map body
+    only: step specs, transform parameters and oracle maps elsewhere in
+    the file share the arrow shape but are not declared queries."""
     # strip line comments/scaladoc so documented examples don't gate
     stripped = re.sub(r'//[^\n]*', '', src)
     stripped = re.sub(r'/\*.*?\*/', '', stripped, flags=re.S)
-    # only true declared-query registries carry `"name" -> impl` keys we
-    # care about (`val queries: Map[String, Q]` in the ops files); JSON
-    # literal maps elsewhere (e.g. the HTTP facade) share the arrow shape
-    # but none of their keys are declared queries
-    is_registry = re.search(r'val\s+queries\s*:\s*Map\[String,', stripped)
-    keys = set(REG_KEY.findall(stripped)) if is_registry else set()
+    body = queries_body(stripped)
+    keys = set(REG_KEY.findall(body)) if body is not None else set()
     return keys, set(TOP_TYPE.findall(stripped))
+
+
+def registry_keys(path):
+    """parse_registry of the file at `path` (relative to the repo root)."""
+    try:
+        with open(os.path.join(REPO, path)) as f:
+            return parse_registry(f.read())
+    except FileNotFoundError:
+        return set(), set()
 
 
 def all_main_files():
