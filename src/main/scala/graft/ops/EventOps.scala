@@ -557,29 +557,25 @@ object EventOps {
           .as("converted"))
   }
 
-  /** E18: LINEAR multi-touch attribution — e12's last-touch twin for the
-    * other standard credit model: every click/view in the 24 h lookback
-    * shares the purchase's value equally ('direct' when no touch). The
-    * purchases×touches pairing is the classic inequality-join trap; the
-    * j10 banding restores an equi key — both sides bucket time by the
-    * lookback width, each purchase probes its 2 spanned buckets, the
-    * exact µs predicate runs inside (user, bucket) hash-join buckets.
-    * Credit splits in exact integer micro-cents via floor division (the
-    * flooring loses < n_touches µ¢ per purchase and is engine-identical);
-    * the per-purchase touch count is a purchase-keyed window over the
-    * pair rows, never a second events pass. */
-  /** e18 core over ANY typed event stream — registry `linear_attribution`. */
-  private[graft] def linearAttributionFrames(ev0: org.apache.spark.sql.DataFrame,
-      tsCol: String, touches: Seq[String], target: String,
-      band: Long): org.apache.spark.sql.DataFrame = {
-    val ev = Tables.microTs(ev0, tsCol)
-      .withColumn("ts_us", us(col(tsCol)))
+  /** The banded purchase × touch pairs e18 and e19 credit over, from an
+    * event stream carrying the exact-µs `ts_us`: every `touches` event in
+    * the `band`-µs lookback before (or at) a `target` event. Pairing
+    * purchases with touches is the classic inequality-join trap; the j10
+    * banding restores an equi key — both sides bucket time by the
+    * lookback width, each purchase probes its 2 spanned buckets, and the
+    * exact µs predicate runs inside (user, bucket) hash-join buckets, so
+    * it is never a nested loop.
+    * @return the purchases (user_id, pid, pts, cents) and the pairs
+    *         (pid, cents, channel, tts, tid) */
+  private def bandedTouchPairs(ev: org.apache.spark.sql.DataFrame,
+      touches: Seq[String], target: String, band: Long)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val p = ev.where(col("event_type") === target)
       .select(col("user_id"), col("event_id").as("pid"),
         col("ts_us").as("pts"), Relational.cents(col("value")).as("cents"))
     val t = ev.where(col("event_type").isin(touches: _*))
       .select(col("user_id"), col("event_type").as("channel"),
-        col("ts_us").as("tts"))
+        col("ts_us").as("tts"), col("event_id").as("tid"))
       .withColumn("bucket", floor(col("tts") / band))
     val pb = p.withColumn("b0", floor(col("pts") / band))
       .select(col("user_id"), col("pid"), col("pts"), col("cents"),
@@ -590,7 +586,26 @@ object EventOps {
     // build maps are bounded by one user-day's purchases.
     val pairs = pb.hint("shuffle_hash").join(t, Seq("user_id", "bucket"))
       .where(col("tts") > col("pts") - band && col("tts") <= col("pts"))
-      .select(col("pid"), col("cents"), col("channel"))
+      .select(col("pid"), col("cents"), col("channel"), col("tts"), col("tid"))
+    (p, pairs)
+  }
+
+  /** E18: LINEAR multi-touch attribution over ANY typed event stream
+    * (registry `linear_attribution`; the declared e18 pins click/view →
+    * purchase, 24 h) — e12's last-touch twin for the other standard
+    * credit model: every touch in the lookback shares the
+    * purchase's value equally ('direct' when no touch). Credit splits in
+    * exact integer micro-cents via floor division (the flooring loses
+    * < n_touches µ¢ per purchase and is engine-identical); the
+    * per-purchase touch count is a purchase-keyed window over the
+    * [[bandedTouchPairs]] rows, never a second events pass. */
+  private[graft] def linearAttributionFrames(ev0: org.apache.spark.sql.DataFrame,
+      tsCol: String, touches: Seq[String], target: String,
+      band: Long): org.apache.spark.sql.DataFrame = {
+    val ev = Tables.microTs(ev0, tsCol)
+      .withColumn("ts_us", us(col(tsCol)))
+    val (p, touchPairs) = bandedTouchPairs(ev, touches, target, band)
+    val pairs = touchPairs.select(col("pid"), col("cents"), col("channel"))
     val wP = Window.partitionBy(col("pid"))
     val credits = pairs
       .withColumn("n_touch", count(lit(1)).over(wP))
@@ -615,28 +630,14 @@ object EventOps {
     * credit model after last-touch (e12) and linear (e18): the FIRST and
     * LAST touch in the lookback each take 40%, the middles share the
     * remaining 20% (single touch takes all; a pair splits 50/50). Same
-    * banded pair generation as e18 (never a nested loop); position comes
-    * from ONE purchase-keyed window over the pair rows — (tts, tid)
-    * total order, the µs+id rule — and shares are integer parts-per-
-    * million, so credits are exact BIGINTs cross-engine. */
+    * [[bandedTouchPairs]] as e18; position comes from ONE purchase-keyed
+    * window over the pair rows — (tts, tid) total order, the µs+id rule —
+    * and shares are integer parts-per-million, so credits are exact
+    * BIGINTs cross-engine. */
   val e19PositionAttribution: Q = (s, d) => {
-    val band = 86400L * 1000000
     val ev = Tables.events(s, d).withColumn("ts_us", us(col("ts")))
-    val p = ev.where(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("pid"),
-        col("ts_us").as("pts"), Relational.cents(col("value")).as("cents"))
-    val t = ev.where(col("event_type").isin("click", "view"))
-      .select(col("user_id"), col("event_type").as("channel"),
-        col("ts_us").as("tts"), col("event_id").as("tid"))
-      .withColumn("bucket", floor(col("tts") / band))
-    val pb = p.withColumn("b0", floor(col("pts") / band))
-      .select(col("user_id"), col("pid"), col("pts"), col("cents"),
-        explode(array(col("b0") - 1, col("b0"))).as("bucket"))
-    // SHUFFLE_HASH: same banded-pair shape and same exploded-purchase
-    // static-estimate trap as e18 — see linearAttributionFrames.
-    val pairs = pb.hint("shuffle_hash").join(t, Seq("user_id", "bucket"))
-      .where(col("tts") > col("pts") - band && col("tts") <= col("pts"))
-      .select(col("pid"), col("cents"), col("channel"), col("tts"), col("tid"))
+    val (p, pairs) = bandedTouchPairs(ev, Seq("click", "view"), "purchase",
+      band = 86400L * 1000000)
     val wP = Window.partitionBy(col("pid")).orderBy(col("tts"), col("tid"))
     val wN = Window.partitionBy(col("pid"))
     val share = when(col("n_touch") === 1, lit(1000000L))

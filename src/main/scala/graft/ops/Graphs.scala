@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -48,19 +49,12 @@ object Graphs {
     * advertised fixpoint/tolerance — say so (ADVICE r9: a default
     * converge run silently stopping far from the fixpoint had no signal
     * to the caller). Warn-level: the result is still well-defined (the
-    * capped prefix of the iteration), just not the fixpoint. */
-  private def warnCapExit(op: String, rounds: Int, residual: String): Unit =
+    * capped prefix of the iteration), just not the fixpoint. The k-core
+    * cap check lives in the registry's `kcore` transform, the only caller
+    * that runs [[kcorePeel]] to a fixpoint. */
+  private[graft] def warnCapExit(op: String, rounds: Int, residual: String): Unit =
     log.warn(s"$op stopped on the round cap ($rounds rounds), NOT on " +
       s"convergence — $residual; raise max_rounds for the true fixpoint")
-
-  /** Lineage cut for iteration BASE tables (edge lists, vertex sets) and
-    * the kcore per-round truncation — the SAME dual posture as the CC
-    * loop's truncate: reliable `checkpoint` when a checkpoint dir is set
-    * (cluster mode: recomputation after executor loss bottoms out at
-    * files, never replays the unrolled multi-join lineage),
-    * `localCheckpoint` otherwise (local/test: blocks live outside the
-    * CacheManager and the ContextCleaner reclaims them on drop). */
-  private def cutBase(df: DataFrame): DataFrame = graft.core.Lineage.cut(df)
 
   /** Per-round reliable truncation for the UNROLLED iterative ops
     * (pageRank, labelPropagation): in cluster posture, cut the lineage
@@ -186,8 +180,8 @@ object Graphs {
   /** The DISTINCT (sa < sb) simple edge list — a MAP-SIDE view over the
     * memoized adjacency checkpoint (each undirected edge appears in both
     * endpoints' neighbor sets; the u < v filter keeps exactly one
-    * canonical copy). Kept for the probes/tests that consume the edge
-    * form. */
+    * canonical copy). The edge form for the specs and `tools/DumpPlans`;
+    * no declared query reads it. */
   private[graft] def coOccurrenceEdges(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
     coOccurrenceAdj(s, d)
@@ -198,7 +192,7 @@ object Graphs {
       d: String): DataFrame = {
     val key = (s.sparkContext.applicationId, d)
     edgeMemo.get(key).getOrElse {
-      val built = cutBase(coOccurrenceAdjPlan(s, d))
+      val built = Lineage.cut(coOccurrenceAdjPlan(s, d))
       // putIfAbsent, not getOrElseUpdate: under a concurrent first access
       // exactly ONE build wins the map; the loser's eagerly-materialized
       // frame is simply dropped (no map entry ever points at it, so the
@@ -336,39 +330,10 @@ object Graphs {
     *
     * @param edges columns `src`, `dst`, `w` (long weight)
     * @return columns `node`, `pr` (rounded to 8 decimals) */
-  def pageRank(edges0: DataFrame, damping: Double, iters: Int): DataFrame = {
-    // every unrolled iteration joins the edge list, and nodes/out-weights
-    // derive from it too — without a lineage cut the upstream edge
-    // aggregation re-executes once per consumer (measured 3× on the
-    // declared graph). Same posture as the CC engine's per-round truncate.
-    val edges = cutBase(edges0)
-    val nodes = cutBase(edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node"))).distinct())
-    val nN = broadcast(nodes.agg(count(lit(1)).as("n_nodes")))
-    val ew = contribEdges(edges)
-    var pr: DataFrame = null
-    for (i <- 1 to iters) {
-      // round 1 reads the UNIFORM pr0 = 1/N straight off the edge table
-      // (r21, guide §2.4): the join against the initial rank vector only
-      // attached the same constant to every edge row — per-row terms are
-      // bit-identical ((1.0/N)·w/outw), one edge-scale join gone. No
-      // precondition: pr0 is uniform by definition on any graph.
-      val inflow = (if (i == 1)
-          ew.crossJoin(nN)
-            .select(col("dst"), (lit(1.0) / col("n_nodes")).as("pr"),
-              col("w"), col("outw"))
-        else ew.join(pr.withColumnRenamed("node", "src"), Seq("src")))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("pr") * col("w") / col("outw")).as("inflow"))
-      pr = cutRound(nodes.crossJoin(nN)
-        .join(inflow, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit(1.0 - damping) / col("n_nodes") +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr")), i, iters)
-    }
-    if (pr == null)
-      pr = nodes.crossJoin(nN)
-        .select(col("node"), (lit(1.0) / col("n_nodes")).as("pr"))
+  def pageRank(edges: DataFrame, damping: Double, iters: Int): DataFrame = {
+    val g = new RankGraph(edges, damping)
+    var pr = g.uniform
+    for (i <- 1 to iters) pr = cutRound(g.next(i, pr), i, iters)
     pr.select(col("node"), round(col("pr"), 8).as("pr"))
   }
 
@@ -383,34 +348,17 @@ object Graphs {
     * fixpoint is bounded by tol·d/(1−d), the geometric tail of the
     * damping contraction (asserted in GraphsReliableSpec against the
     * analytic fixpoint of a cyclic test graph). */
-  def pageRankConverged(edges0: DataFrame, damping: Double,
+  def pageRankConverged(edges: DataFrame, damping: Double,
       maxRounds: Int, tol: Double): DataFrame = {
-    val edges = cutBase(edges0)
-    val nodes = cutBase(edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node"))).distinct())
-    val nN = broadcast(nodes.agg(count(lit(1)).as("n_nodes")))
-    val ew = contribEdges(edges)
-    var pr = cutBase(nodes.crossJoin(nN)
-      .select(col("node"), (lit(1.0) / col("n_nodes")).as("pr")))
+    val g = new RankGraph(edges, damping)
+    // materialized: round 2 joins it as the previous vector and round 1's
+    // delta reads it as the L1 baseline
+    var pr = Lineage.cut(g.uniform)
     var round0 = 0
     var delta = Double.MaxValue
     while (round0 < maxRounds && delta >= tol) {
       round0 += 1
-      // round-1 uniform-vector shortcut — see [[pageRank]] (per-row terms
-      // bit-identical; the delta join below still reads the materialized
-      // pr0, which is also the L1 baseline)
-      val inflow = (if (round0 == 1)
-          ew.crossJoin(nN)
-            .select(col("dst"), (lit(1.0) / col("n_nodes")).as("pr"),
-              col("w"), col("outw"))
-        else ew.join(pr.withColumnRenamed("node", "src"), Seq("src")))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("pr") * col("w") / col("outw")).as("inflow"))
-      val next = cutLoop(nodes.crossJoin(nN)
-        .join(inflow, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit(1.0 - damping) / col("n_nodes") +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr")), round0)
+      val next = cutLoop(g.next(round0, pr), round0)
       // L1 delta over the node-keyed join of the two rank vectors — one
       // node-scale exchange, no driver-side vectors
       delta = next.join(pr.withColumnRenamed("pr", "prev"), Seq("node"))
@@ -421,6 +369,44 @@ object Graphs {
     if (delta >= tol)
       warnCapExit("pageRankConverged", maxRounds, s"L1 delta $delta >= tol $tol")
     pr.select(col("node"), round(col("pr"), 8).as("pr"))
+  }
+
+  /** The setup and round body both PageRank loops share. Every round
+    * joins the edge list, and nodes/out-weights derive from it too —
+    * without a lineage cut the upstream edge aggregation re-executes once
+    * per consumer (measured 3× on the declared graph), so the edges and
+    * the node set are cut once here; N is a 1-row broadcast. */
+  private final class RankGraph(edges0: DataFrame, damping: Double) {
+    private val edges = Lineage.cut(edges0)
+    private val nodes = Lineage.cut(edges.select(col("src").as("node"))
+      .unionByName(edges.select(col("dst").as("node"))).distinct())
+    private val nN = broadcast(nodes.agg(count(lit(1)).as("n_nodes")))
+    private val ew = contribEdges(edges)
+
+    /** pr₀ = 1/N on every node. */
+    val uniform: DataFrame = nodes.crossJoin(nN)
+      .select(col("node"), (lit(1.0) / col("n_nodes")).as("pr"))
+
+    /** Round `i`'s rank vector from the previous one, `pr`. Round 1 reads
+      * the UNIFORM pr₀ = 1/N straight off the edge table and ignores `pr`
+      * (r21, guide §2.4): the join against the initial rank vector only
+      * attached the same constant to every edge row — per-row terms are
+      * bit-identical ((1.0/N)·w/outw), one edge-scale join gone. No
+      * precondition: pr₀ is uniform by definition on any graph. */
+    def next(i: Int, pr: DataFrame): DataFrame = {
+      val inflow = (if (i == 1)
+          ew.crossJoin(nN)
+            .select(col("dst"), (lit(1.0) / col("n_nodes")).as("pr"),
+              col("w"), col("outw"))
+        else ew.join(pr.withColumnRenamed("node", "src"), Seq("src")))
+        .groupBy(col("dst").as("node"))
+        .agg(sum(col("pr") * col("w") / col("outw")).as("inflow"))
+      nodes.crossJoin(nN)
+        .join(inflow, Seq("node"), "left_outer")
+        .select(col("node"),
+          (lit(1.0 - damping) / col("n_nodes") +
+            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr"))
+    }
   }
 
   /** The out-weight-annotated edge table both PageRank variants iterate
@@ -539,37 +525,50 @@ object Graphs {
       .crossJoin(tri)
   }
 
-  /** Synchronous deterministic label propagation over ANY undirected edge
-    * list: labels start as node ids; each round every node adopts the
+  /** The bidirected adjacency table (u, vs) of ANY undirected (sa, sb)
+    * edge list — what [[labelPropagation]], [[labelPropagationConverged]]
+    * and [[kcorePeel]] iterate over when they run on registry edges (the
+    * declared l40/l46/l46b pass the memoized [[coOccurrenceAdj]]
+    * instead). Built ONCE before the rounds (r21, guide §2.3 — the
+    * triangle-count edge-iterator posture; the k-core hoist measured
+    * l46 10×: 18.93 → 12.83 s in r14): the former per-round joins carried
+    * the EDGE-scale bidirected table, now they are node-scale × node-scale
+    * (same total neighbor bytes, ~2 orders fewer rows through the join)
+    * and the neighbor expansion happens map-side via explode. collect_list
+    * keeps duplicate neighbors, so a multigraph input keeps its semantics
+    * exactly: LPA label counts and k-core degrees (edge endpoints,
+    * counting multiplicity) are the bidirected edge table's. */
+  private[graft] def adjacency(edges: DataFrame): DataFrame =
+    Lineage.cut(edges.select(col("sa").as("u"), col("sb").as("v"))
+      .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
+      .groupBy(col("u")).agg(collect_list(col("v")).as("vs")))
+
+  /** Synchronous deterministic label propagation over a MATERIALIZED
+    * bidirected adjacency table (u, vs) — the declared l40 passes
+    * [[coOccurrenceAdj]] directly (its memoized build is the only exchange
+    * the graph costs), the registry passes [[adjacency]] of arbitrary
+    * edges. Labels start as node ids; each round every node adopts the
     * most frequent label among its NEIGHBORS (count desc, label asc
     * tie-break — the determinism knob async LPA lacks). Every node in the
-    * derived node set has ≥1 edge, so each round relabels every node.
-    * Per round: one node-scale join of the label vector against the
-    * [[lpaAdj]] adjacency table (neighbor lists explode MAP-SIDE), one
+    * adjacency has ≥1 neighbor, so each round relabels every node. Per
+    * round ([[lpaRound]]): one node-scale join of the label vector
+    * against the adjacency (neighbor lists explode MAP-SIDE), one
     * (node, label) aggregation + one node argmax aggregation — label
     * counts (not floats) on the wire.
     *
-    * `simpleGraph = true` (caller-asserted: the edge list is DISTINCT,
-    * like [[coOccurrenceEdges]]) unlocks the round-1 algebraic shortcut:
-    * with labels = ids and no duplicate edges, every (node, neighbor-
-    * label) count in round 1 is exactly 1, so "most frequent, count desc
-    * / label asc" degenerates to min(neighbor) — one array_min over the
-    * adjacency row replaces round 1's join + two aggregations. On a
-    * multigraph counts exceed 1 and the shortcut is invalid, so the
-    * registry path (arbitrary `edges` input) keeps the generic round.
-    * Measured sf0.1 (r21, min of 2, same JVM): declared
+    * `simpleGraph = true` (caller-asserted: the neighbor lists are
+    * DISTINCT, like [[coOccurrenceAdj]]'s collect_set) unlocks the round-1
+    * algebraic shortcut: with labels = ids and no duplicate edges, every
+    * (node, neighbor-label) count in round 1 is exactly 1, so "most
+    * frequent, count desc / label asc" degenerates to min(neighbor) — one
+    * array_min over the adjacency row replaces round 1's join + two
+    * aggregations. On a multigraph counts exceed 1 and the shortcut is
+    * invalid, so the registry path (arbitrary `edges` input) keeps the
+    * generic round. Measured sf0.1 (r21, min of 2, same JVM): declared
     * l40 4.00 s → 2.61 s with adjacency rounds + shortcut; output
     * bit-identical (exceptAll both ways = 0). */
-  private[graft] def labelPropagation(edges: org.apache.spark.sql.DataFrame,
-      rounds: Int, simpleGraph: Boolean = false): org.apache.spark.sql.DataFrame =
-    labelPropagationAdj(lpaAdj(edges), rounds, simpleGraph)
-
-  /** LPA core over a MATERIALIZED bidirected adjacency table (u, vs) —
-    * the declared l40 passes [[coOccurrenceAdj]] directly (its memoized
-    * build is the only exchange the graph costs), the edge-input overload
-    * above groups arbitrary registry edges via [[lpaAdj]]. */
-  private[graft] def labelPropagationAdj(adj: org.apache.spark.sql.DataFrame,
-      rounds: Int, simpleGraph: Boolean): org.apache.spark.sql.DataFrame = {
+  private[graft] def labelPropagation(adj: DataFrame, rounds: Int,
+      simpleGraph: Boolean = false): DataFrame = {
     val shortcut = simpleGraph && rounds >= 1
     // round-0 labels are the ids themselves; adj's u column is already the
     // distinct endpoint set (one row per node), so no separate distinct
@@ -594,21 +593,6 @@ object Graphs {
     labels.select(col("node"), col("lab").as("community"))
   }
 
-  /** The per-node adjacency table both LPA variants iterate over, built
-    * ONCE: bidirect the edge list and group each node's neighbor list
-    * into an array (r21, guide §2.3 — the triangle-count edge-iterator
-    * posture). The former per-round join carried the EDGE-scale
-    * bidirected table into every round's join; now the per-round join is
-    * node-scale × node-scale (same total neighbor bytes, ~2 orders fewer
-    * rows through the join) and the neighbor expansion happens map-side
-    * via explode, after the join. Multiplicity is preserved exactly —
-    * collect_list keeps duplicate neighbors, so multigraph label counts
-    * are unchanged on the generic path. */
-  private def lpaAdj(edges: DataFrame): DataFrame =
-    cutBase(edges.select(col("sa").as("u"), col("sb").as("v"))
-      .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
-      .groupBy(col("u")).agg(collect_list(col("v")).as("vs")))
-
   /** One synchronous LPA round over the adjacency table: every node's
     * label is delivered to its neighbors (join on the node key, explode
     * the neighbor list map-side — the graph is undirected, so sending
@@ -624,18 +608,17 @@ object Graphs {
       .agg(max(struct(col("c"), (-col("nlab")).as("neg"))).as("m"))
       .select(col("rcv").as("node"), (-col("m.neg")).as("lab"))
 
-  /** Run-to-convergence LPA — synchronous rounds until NO label changes
-    * (a true fixpoint: one more round reproduces the same assignment,
-    * asserted in GraphsReliableSpec) or `maxRounds` is hit. Synchronous
-    * LPA can 2-cycle on bipartite-ish structure, so the round cap is the
-    * termination guarantee, not a tuning knob. The changed-count is one
-    * node-keyed join per round (node-scale, integer rows); per-round
-    * materialization runs under the CC loop's dual posture. */
-  private[graft] def labelPropagationConverged(
-      edges: org.apache.spark.sql.DataFrame,
-      maxRounds: Int): org.apache.spark.sql.DataFrame = {
-    val adj = lpaAdj(edges)
-    var labels = cutBase(adj.select(col("u").as("node"), col("u").as("lab")))
+  /** Run-to-convergence LPA over the same adjacency table — synchronous
+    * rounds until NO label changes (a true fixpoint: one more round
+    * reproduces the same assignment, asserted in GraphsReliableSpec) or
+    * `maxRounds` is hit. Synchronous LPA can 2-cycle on bipartite-ish
+    * structure, so the round cap is the termination guarantee, not a
+    * tuning knob. The changed-count is one node-keyed join per round
+    * (node-scale, integer rows); per-round materialization runs under the
+    * CC loop's dual posture. */
+  private[graft] def labelPropagationConverged(adj: DataFrame,
+      maxRounds: Int): DataFrame = {
+    var labels = Lineage.cut(adj.select(col("u").as("node"), col("u").as("lab")))
     var round0 = 0
     var changed = 1L
     while (round0 < maxRounds && changed > 0) {
@@ -666,25 +649,21 @@ object Graphs {
     // straight over the memoized adjacency — zero graph-build exchanges
     // beyond the memo's own; simpleGraph: collect_set neighbors are
     // distinct, so the round-1 min(neighbor) shortcut is exact
-    labelPropagationAdj(coOccurrenceAdj(s, d), rounds = 3, simpleGraph = true)
+    labelPropagation(coOccurrenceAdj(s, d), rounds = 3, simpleGraph = true)
 
-  /** Bounded-round k-core peel over ANY undirected simple edge list
-    * (Seidman 1983 degeneracy peeling; the Batagelj–Zaveršnik shape run
-    * synchronously): each round recomputes degrees over the CURRENT
-    * induced graph and removes every node with degree < k, all at once.
-    * Fixed `rounds` (not run-to-fixpoint) keeps the result a pure
-    * SQL-unrollable function of the graph — the l26/l40 determinism rule
-    * — and is also how a 100 TB run bounds the iteration budget; each
-    * round is one node-scale removed join + one map-side neighbor-list
-    * explode, integer degrees on the wire, checkpoint per round (the CC
-    * posture). Returns survivors with their residual degree. */
-  private[graft] def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    kcorePeelAdj(kcoreAdj(edges), k, rounds)
-
-  /** k-core peel core over a MATERIALIZED bidirected adjacency table
-    * (u, vs) — the declared l46/l46b pass [[coOccurrenceAdj]] directly;
-    * the edge-input overload above groups arbitrary registry edges via
-    * [[kcoreAdj]] (collect_list preserves multigraph degree semantics).
+  /** Synchronous k-core peel (Seidman 1983 degeneracy peeling; the
+    * Batagelj–Zaveršnik shape run synchronously) over a MATERIALIZED
+    * bidirected adjacency table (u, vs) — the declared l46/l46b pass
+    * [[coOccurrenceAdj]], the registry passes [[adjacency]] of arbitrary
+    * edges. Each round removes every node whose degree in the CURRENT
+    * induced graph is < k, all at once. At most `rounds` rounds, so the
+    * declared queries stay a pure SQL-unrollable function of the graph —
+    * the l26/l40 determinism rule — and a 100 TB run bounds its iteration
+    * budget. The loop stops early at the first round that removes
+    * nothing: that state is the true Seidman k-core (every survivor has
+    * induced degree ≥ k), so the registry's converge=true runs this same
+    * loop with `rounds = max_rounds` and checks the cap itself. Returns
+    * survivors with their residual degree.
     *
     * DEGREE-DELTA peel (VERDICT r12 #3, reshaped r21): the adjacency is
     * materialized ONCE; each round mutates only the NODE-scale degree
@@ -695,8 +674,8 @@ object Graphs {
     * explodes only the removed nodes' neighbor lists map-side — the
     * former shape scanned the FULL edge-scale bidirected table per round
     * for its left_semi + groupBy(v). */
-  private[graft] def kcorePeelAdj(adj: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var deg = cutBase(adj.select(col("u"), size(col("vs")).cast("long").as("deg")))
+  private[graft] def kcorePeel(adj: DataFrame, k: Int, rounds: Int): DataFrame = {
+    var deg = Lineage.cut(adj.select(col("u"), size(col("vs")).cast("long").as("deg")))
     var r = 1
     var peeling = true
     while (r <= rounds && peeling) {
@@ -728,65 +707,6 @@ object Graphs {
       .select(col("u").as("node"), col("deg"))
   }
 
-  /** Run-to-convergence k-core — peel until NO edge is removed (the true
-    * Seidman k-core: every surviving node has induced degree ≥ k; one more
-    * peel round is the identity, asserted in GraphsReliableSpec) or
-    * `maxRounds` is hit. Peeling is monotone (the edge set only shrinks),
-    * so the edge COUNT is the free convergence signal — no edge-level
-    * diff join; per-round materialization runs under the CC loop's dual
-    * posture. */
-  /** The bidirected adjacency table the edge-input k-core overloads peel
-    * over, built ONCE before the rounds (the hoist that measurably helped
-    * — l46 10×: 18.93 → 12.83 s in r14; reshaped to adjacency arrays in
-    * r21 so per-round work is node-scale). collect_list keeps duplicate
-    * neighbors, so a multigraph input's degree semantics (degree = edge
-    * endpoints, counting multiplicity) are exactly the former bidirected
-    * edge table's. */
-  private def kcoreAdj(edges: DataFrame): DataFrame =
-    cutBase(edges.select(col("sa").as("u"), col("sb").as("v"))
-      .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
-      .groupBy(col("u")).agg(collect_list(col("v")).as("vs")))
-
-  private[graft] def kcorePeelConverged(edges: DataFrame, k: Int,
-      maxRounds: Int): DataFrame = {
-    // Same degree-delta shape as [[kcorePeelAdj]]; the convergence signal
-    // is the REMOVED-node count (node-scale, and the natural monotone
-    // signal of delta peeling — no node below k means one more round is
-    // the identity, the true Seidman fixpoint asserted in
-    // GraphsReliableSpec).
-    val adj = kcoreAdj(edges)
-    var deg = cutBase(adj.select(col("u"), size(col("vs")).cast("long").as("deg")))
-    var round0 = 0
-    var nRemoved = 1L
-    while (round0 < maxRounds && nRemoved > 0) {
-      round0 += 1
-      val removed = deg.where(col("deg") < k).select(col("u"))
-      nRemoved = removed.count()
-      if (nRemoved > 0) {
-        val dec = adj.join(removed, Seq("u"))
-          .select(explode(col("vs")).as("u"))
-          .groupBy(col("u")).agg(count(lit(1)).as("dec"))
-        deg = cutLoop(
-          deg.join(removed, Seq("u"), "left_anti")
-            .join(dec, Seq("u"), "left")
-            .select(col("u"),
-              (col("deg") - coalesce(col("dec"), lit(0L))).as("deg")),
-          round0)
-      }
-    }
-    // nRemoved > 0 at loop exit only says the LAST EXECUTED round removed
-    // nodes, not that the post-removal state is short of the fixpoint —
-    // e.g. a final round that peeled only stragglers whose removal left
-    // every survivor at deg >= k. Re-check the UPDATED state before
-    // warning, so the cap-exit warning fires only when sub-k nodes
-    // actually remain (ADVICE r13).
-    if (nRemoved > 0 && !deg.where(col("deg") < k).isEmpty)
-      warnCapExit("kcorePeelConverged", maxRounds,
-        s"nodes below k=$k remain after the capped final round")
-    deg.where(col("deg") > 0)
-      .select(col("u").as("node"), col("deg"))
-  }
-
   /** L46: k-core decomposition (3 peel rounds, k = 3) over the l35/l40
     * part co-occurrence graph — the dense-substructure filter that
     * complements l35's triangle DENSITY number and l40's communities:
@@ -794,7 +714,7 @@ object Graphs {
     * link-graph corpora, and the standard pre-filter before expensive
     * community/centrality passes since peeling is edge-linear). */
   val l46Kcore: graft.ops.Relational.Q = (s, d) =>
-    kcorePeelAdj(coOccurrenceAdj(s, d), k = 3, rounds = 3)
+    kcorePeel(coOccurrenceAdj(s, d), k = 3, rounds = 3)
 
   /** L46b: the same peel with a k that ACTUALLY REMOVES nodes on the
     * declared data (VERDICT r13 perf note: at k=3 the fixture removes
@@ -809,7 +729,7 @@ object Graphs {
     * 19472 → 19415 → 19408. Same operator, same plan — only the
     * threshold differs. */
   val l46bKcoreDeep: graft.ops.Relational.Q = (s, d) =>
-    kcorePeelAdj(coOccurrenceAdj(s, d), k = 75, rounds = 3)
+    kcorePeel(coOccurrenceAdj(s, d), k = 75, rounds = 3)
 
   /** L51: market-basket association (support + lift per co-purchased part
     * pair — the classic Apriori-style "frequently bought together"
@@ -833,7 +753,7 @@ object Graphs {
     // Identical rows: collect_set dedups exactly like the old distinct,
     // each order contributes each (pa < pb) pair exactly once, and the
     // not-null guards reproduce the old join/countDistinct null semantics.
-    val baskets = cutBase(orderBaskets(s, d))
+    val baskets = Lineage.cut(orderBaskets(s, d))
     val nB = baskets.agg(count(lit(1)).as("n_baskets"))
     val item = baskets.select(explode(col("ps")).as("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))

@@ -1164,10 +1164,6 @@ object TextOps {
   private[graft] def decontaminateFrames(
       train: DataFrame, eval: DataFrame, n: Int,
       hashBits: Int = 64, broadcastEval: Boolean = true): DataFrame = {
-    def sh(df: DataFrame): DataFrame =
-      df.withColumn("t", toks(col("text")))
-        .select(col("doc_id"), explode(shingles(col("t"), n)).as("s"))
-        .select(col("doc_id"), shingleKey(col("s"), hashBits).as("s"))
     // distinct() before the broadcast: the eval side is benchmark-suite-
     // sized BY CONTRACT (the author-asserted broadcast below, which Spark
     // honors regardless of measured size — AQE does not demote an explicit
@@ -1191,10 +1187,11 @@ object TextOps {
     // fixed-eval cells (a constant copy-0 slice, real matches) scale
     // linearly in the train side — the production contract's shape.
     // The registry transform exposes `broadcast_eval`.
-    val evalSh = sh(eval).select(col("s"), col("doc_id").as("eval_id")).distinct()
+    val evalSh = shingleRows(eval, n, hashBits)
+      .select(col("s"), col("doc_id").as("eval_id")).distinct()
     val evalSide = if (broadcastEval) broadcast(evalSh)
                    else evalSh.hint("shuffle_hash")
-    sh(train).join(evalSide, Seq("s"))
+    shingleRows(train, n, hashBits).join(evalSide, Seq("s"))
       .groupBy(col("doc_id"))
       .agg(count_distinct(col("eval_id")).as("n_eval_hits"),
         count_distinct(col("s")).as("n_shared_shingles"))

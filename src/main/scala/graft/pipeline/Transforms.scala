@@ -409,21 +409,30 @@ object Transforms {
     def maxRounds(p: ParamMap): Int =
       p.params.get("max_rounds").map(_.toInt).getOrElse(50)
     // k-core peel over any (sa, sb) undirected edge list: fixed `rounds`
-    // by default (the deterministic-oracle mode); converge=true runs to
-    // the TRUE Seidman k-core fixpoint, capped at `max_rounds`
+    // by default (the deterministic-oracle mode); converge=true runs the
+    // same peel with rounds = max_rounds — it stops at the first round
+    // that removes nothing, the TRUE Seidman k-core — and warns if a node
+    // below k still survives (the cap came first)
     r.register("kcore") { (_, in, p) =>
+      import org.apache.spark.sql.functions.col
       val k = p.params.getOrElse("k", "3").toInt
-      if (p.params.getOrElse("converge", "false").toBoolean)
-        graft.ops.Graphs.kcorePeelConverged(in("edges"), k, maxRounds(p))
-      else graft.ops.Graphs.kcorePeel(in("edges"), k,
-        p.params.getOrElse("rounds", "3").toInt)
+      val converge = p.params.getOrElse("converge", "false").toBoolean
+      val rounds =
+        if (converge) maxRounds(p) else p.params.getOrElse("rounds", "3").toInt
+      val core = graft.ops.Graphs.kcorePeel(
+        graft.ops.Graphs.adjacency(in("edges")), k, rounds)
+      if (converge && !core.where(col("deg") < k).isEmpty)
+        graft.ops.Graphs.warnCapExit("kcore", rounds,
+          s"nodes below k=$k remain after the capped final round")
+      core
     }
     // synchronous label propagation over any (sa, sb) undirected edge
     // list: fixed rounds, or converge=true → fixpoint capped at max_rounds
     r.register("label_prop") { (_, in, p) =>
+      val adj = graft.ops.Graphs.adjacency(in("edges"))
       if (p.params.getOrElse("converge", "false").toBoolean)
-        graft.ops.Graphs.labelPropagationConverged(in("edges"), maxRounds(p))
-      else graft.ops.Graphs.labelPropagation(in("edges"),
+        graft.ops.Graphs.labelPropagationConverged(adj, maxRounds(p))
+      else graft.ops.Graphs.labelPropagation(adj,
         p.params.getOrElse("rounds", "3").toInt)
     }
     // damped PageRank over any weighted (src, dst, w) edge list: fixed

@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-/** Exercises the connected-components engine's RELIABLE-checkpoint posture
-  * — the cluster-mode path (`Graphs.truncate`: persist per round, reliable
-  * checkpoint every 3rd, final-round checkpoint move) that the other specs
-  * never reach because no checkpoint dir is set in local test sessions.
+/** Exercises the graph loops' RELIABLE-checkpoint posture — the
+  * cluster-mode path (connectedComponents' per-round truncate: persist per
+  * round, reliable checkpoint every 3rd, final-round checkpoint move; the
+  * other loops' every-3rd reliable cut) that the other specs never reach
+  * because no checkpoint dir is set in local test sessions — plus the
+  * fixpoint and round-cap contracts of the registry's converge=true modes.
   *
   * NOTE: SparkContext has no unset for the checkpoint dir, so after this
   * suite runs, concurrently/later CC invocations in this JVM also take the
@@ -13,6 +15,48 @@ import java.nio.file.Files
   * union-find equivalence holds for both postures), only the
   * materialization medium changes. */
 class GraphsReliableSpec extends SparkSpec {
+
+  /** One registry graph transform (`kcore`, `label_prop`, `pagerank`)
+    * over `edges` — the converge=true modes are only reachable here. */
+  private def viaRegistry(name: String, edges: org.apache.spark.sql.DataFrame,
+      params: (String, String)*): org.apache.spark.sql.DataFrame =
+    graft.pipeline.Transforms.standard().resolve(name)(
+      spark, Map("edges" -> edges), graft.pipeline.ParamMap(params.toMap))
+
+  /** The messages the `graft.ops.Graphs` logger emits at WARN or above
+    * while `body` runs. The converge loops warn on the driver thread that
+    * runs them, before the transform returns, so nothing here waits. */
+  private def graphsWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val name = "graft.ops.Graphs"
+    val ctx = LoggerContext.getContext(false)
+    val config = ctx.getConfiguration
+    assert(!config.getLoggers.containsKey(name), s"$name already has a logger config")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("graphs-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    // own level (the shared session logs at ERROR), not additive: the
+    // captured warnings stay out of the console
+    val lc = new LoggerConfig(name, Level.WARN, false)
+    lc.addAppender(capture, null, null)
+    config.addLogger(name, lc)
+    ctx.updateLoggers()
+    try body
+    finally {
+      config.removeLogger(name)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
 
   test("pageRank: exact values on a hand-computed chain, mass and base-rank properties") {
     import spark.implicits._
@@ -49,9 +93,10 @@ class GraphsReliableSpec extends SparkSpec {
     val co = Graphs.coOccurrenceEdges(spark, sfDir)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val kConv = rows(Graphs.kcorePeelConverged(co, k = 3, maxRounds = 50))
-    val k12 = rows(Graphs.kcorePeel(co, k = 3, rounds = 12))
-    val k13 = rows(Graphs.kcorePeel(co, k = 3, rounds = 13))
+    val coAdj = Graphs.adjacency(co)
+    val kConv = rows(viaRegistry("kcore", co, "k" -> "3", "converge" -> "true"))
+    val k12 = rows(Graphs.kcorePeel(coAdj, k = 3, rounds = 12))
+    val k13 = rows(Graphs.kcorePeel(coAdj, k = 3, rounds = 13))
     assert(k12 == k13, "12 fixed peel rounds did not reach the fixpoint — " +
       "raise the fixed reference round count in this test")
     assert(kConv == k12,
@@ -65,9 +110,10 @@ class GraphsReliableSpec extends SparkSpec {
     // round reproduces the same assignment
     val tri = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (10L, 12L), (11L, 12L))
       .toDF("sa", "sb")
-    val lConv = rows(Graphs.labelPropagationConverged(tri, maxRounds = 10))
-    val l4 = rows(Graphs.labelPropagation(tri, rounds = 4))
-    val l5 = rows(Graphs.labelPropagation(tri, rounds = 5))
+    val triAdj = Graphs.adjacency(tri)
+    val lConv = rows(Graphs.labelPropagationConverged(triAdj, maxRounds = 10))
+    val l4 = rows(Graphs.labelPropagation(triAdj, rounds = 4))
+    val l5 = rows(Graphs.labelPropagation(triAdj, rounds = 5))
     assert(l4 == l5, "LPA fixed rounds 4 and 5 disagree — not yet a fixpoint")
     assert(lConv == l4, s"converged LPA != fixed fixpoint: $lConv vs $l4")
     assert(lConv == Set((1L, 1L), (2L, 1L), (3L, 1L),
@@ -77,15 +123,15 @@ class GraphsReliableSpec extends SparkSpec {
     // (round 1 = min neighbor via array_min) must equal the generic path
     // at every round count — including an asymmetric graph (star + path)
     // where round-1 labels differ per node
-    val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 5L), (5L, 6L))
-      .toDF("sa", "sb")
+    val star = Graphs.adjacency(Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("sa", "sb"))
     for (r <- 1 to 4) {
       val generic = rows(Graphs.labelPropagation(star, rounds = r))
       val fast = rows(Graphs.labelPropagation(star, rounds = r, simpleGraph = true))
       assert(fast == generic, s"simpleGraph shortcut diverged at rounds=$r: " +
         s"only-fast=${(fast -- generic).take(3)} only-generic=${(generic -- fast).take(3)}")
-      val fastTri = rows(Graphs.labelPropagation(tri, rounds = r, simpleGraph = true))
-      val genTri = rows(Graphs.labelPropagation(tri, rounds = r))
+      val fastTri = rows(Graphs.labelPropagation(triAdj, rounds = r, simpleGraph = true))
+      val genTri = rows(Graphs.labelPropagation(triAdj, rounds = r))
       assert(fastTri == genTri, s"simpleGraph shortcut diverged on tri at rounds=$r")
     }
 
@@ -122,14 +168,15 @@ class GraphsReliableSpec extends SparkSpec {
     // full degree table, identical to a long unroll
     val clique = (for { i <- 1L to 4L; j <- (i + 1) to 4L } yield (i, j))
       .toDF("sa", "sb")
-    val peeled = rows(Graphs.kcorePeel(clique, k = 3, rounds = 3))
+    val peeled = rows(Graphs.kcorePeel(Graphs.adjacency(clique), k = 3, rounds = 3))
     assert(peeled == (1L to 4L).map(n => n -> 3L).toSet, peeled.toString)
     // clique + pendant chain 4-5-6 at k=2: round 1 removes 6, round 2
     // removes 5, round 3 removes nothing — a rounds=5 peel must equal the
     // exact-2-round peel (the identity tail is skipped, not recomputed)
     val g = clique.unionByName(Seq((4L, 5L), (5L, 6L)).toDF("sa", "sb"))
-    val r5 = rows(Graphs.kcorePeel(g, k = 2, rounds = 5))
-    val r2 = rows(Graphs.kcorePeel(g, k = 2, rounds = 2))
+    val gAdj = Graphs.adjacency(g)
+    val r5 = rows(Graphs.kcorePeel(gAdj, k = 2, rounds = 5))
+    val r2 = rows(Graphs.kcorePeel(gAdj, k = 2, rounds = 2))
     assert(r5 == r2, s"early-exit tail changed the result: ${r5 -- r2} ${r2 -- r5}")
     assert(r5 == Set(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L), r5.toString)
   }
@@ -150,8 +197,8 @@ class GraphsReliableSpec extends SparkSpec {
     // the final round (cutRound's round < total guard)
     val hadDir = spark.sparkContext.getCheckpointDir.isDefined
     val plainPr = prRows(Graphs.pageRank(prEdges, 0.85, iters = 4))
-    val plainLpa = rows(Graphs.labelPropagation(co, rounds = 4))
-    val plainK = rows(Graphs.kcorePeel(co, k = 3, rounds = 4))
+    val plainLpa = rows(Graphs.labelPropagation(Graphs.adjacency(co), rounds = 4))
+    val plainK = rows(Graphs.kcorePeel(Graphs.adjacency(co), k = 3, rounds = 4))
 
     val ckptRoot = Files.createTempDirectory("graft_graphs_ckpt")
     spark.sparkContext.setCheckpointDir(ckptRoot.toString)
@@ -175,11 +222,13 @@ class GraphsReliableSpec extends SparkSpec {
       df
     }
     val relPr = prRows(grew("pageRank")(Graphs.pageRank(prEdges, 0.85, iters = 4)))
-    val relLpa = rows(grew("labelPropagation")(Graphs.labelPropagation(co, rounds = 4)))
-    val relK = rows(grew("kcorePeel")(Graphs.kcorePeel(co, k = 3, rounds = 4)))
-    // the convergence loops upgrade their per-round cut the same way
-    val relKConv = rows(grew("kcorePeelConverged")(
-      Graphs.kcorePeelConverged(co, k = 3, maxRounds = 50)))
+    val relLpa = rows(grew("labelPropagation")(
+      Graphs.labelPropagation(Graphs.adjacency(co), rounds = 4)))
+    val relK = rows(grew("kcorePeel")(
+      Graphs.kcorePeel(Graphs.adjacency(co), k = 3, rounds = 4)))
+    // the converge mode upgrades its cuts the same way
+    val relKConv = rows(grew("kcore converge=true")(
+      viaRegistry("kcore", co, "k" -> "3", "converge" -> "true")))
     assert(relKConv.nonEmpty && relKConv.forall(_._2 >= 3))
     // checkpointing must be behavior-neutral
     if (!hadDir) {
@@ -187,6 +236,48 @@ class GraphsReliableSpec extends SparkSpec {
       assert(relLpa == plainLpa, "LPA rows changed under the reliable posture")
       assert(relK == plainK, "kcore rows changed under the reliable posture")
     }
+  }
+
+  test("converge=true warns on the round cap only when the cap cut the run short") {
+    import spark.implicits._
+    def capped(ws: Seq[String], op: String, rounds: Int): Boolean =
+      ws.exists(_.startsWith(s"$op stopped on the round cap ($rounds rounds)"))
+    // k-core at k=2 on a 4-clique + pendant chain 4-5-6: round 1 removes 6,
+    // round 2 removes 5, round 3 removes nothing. One round leaves 5 below
+    // k; two rounds end exactly on the fixpoint, which is no cap exit.
+    val g = (for { i <- 1L to 4L; j <- (i + 1) to 4L } yield (i, j))
+      .toDF("sa", "sb").unionByName(Seq((4L, 5L), (5L, 6L)).toDF("sa", "sb"))
+    def kcore(maxRounds: String): Seq[String] = graphsWarnings {
+      viaRegistry("kcore", g, "k" -> "2", "converge" -> "true",
+        "max_rounds" -> maxRounds).collect()
+    }
+    val kCut = kcore("1")
+    assert(capped(kCut, "kcore", 1), s"no k-core cap warning: $kCut")
+    assert(kcore("2").isEmpty, "k-core warned although round 2 reached the fixpoint")
+    assert(kcore("50").isEmpty, "converged k-core warned")
+
+    // LPA on two triangles settles after round 2; one round leaves
+    // labels still changing
+    val tri = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (10L, 12L), (11L, 12L))
+      .toDF("sa", "sb")
+    def lpa(maxRounds: String): Seq[String] = graphsWarnings {
+      viaRegistry("label_prop", tri, "converge" -> "true",
+        "max_rounds" -> maxRounds).collect()
+    }
+    val lCut = lpa("1")
+    assert(capped(lCut, "labelPropagationConverged", 1), s"no LPA cap warning: $lCut")
+    assert(lpa("50").isEmpty, "converged LPA warned")
+
+    // PageRank on the damping-0.5 cycle: two rounds are far from tol 1e-9
+    val cyc = Seq(("a", "b", 1L), ("b", "a", 1L), ("c", "a", 1L))
+      .toDF("src", "dst", "w")
+    def pr(maxRounds: String): Seq[String] = graphsWarnings {
+      viaRegistry("pagerank", cyc, "damping" -> "0.5", "converge" -> "true",
+        "tol" -> "1e-9", "max_rounds" -> maxRounds).collect()
+    }
+    val pCut = pr("2")
+    assert(capped(pCut, "pageRankConverged", 2), s"no PageRank cap warning: $pCut")
+    assert(pr("80").isEmpty, "converged PageRank warned")
   }
 
   test("connected components under a checkpoint dir: chain forces the cadence") {

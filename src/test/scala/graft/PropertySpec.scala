@@ -335,7 +335,7 @@ class PropertySpec extends SparkSpec {
       }
       val want = bi.groupBy(_._1).map { case (n, es) => (n, es.size.toLong) }.toSet
       val got = graft.ops.Graphs.kcorePeel(
-          edges.toDF("sa", "sb"), k, rounds)
+          graft.ops.Graphs.adjacency(edges.toDF("sa", "sb")), k, rounds)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == want, s"seed=$seed: spark-only=${(got -- want).take(3)} " +
         s"brute-only=${(want -- got).take(3)}")

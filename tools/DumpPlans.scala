@@ -394,7 +394,7 @@ object DumpPlans {
       "tq21_waiting_supplier" -> "TPC-H Q21 (adapted): the spec's correlated EXISTS/NOT-EXISTS pair over other suppliers' lines is re-expressed as per-(order, supplier) aggregates — n_suppliers >= 2 AND n_late = 1 AND this supplier is the late one — so the plan is two keyed aggregations + one left-semi join instead of a double correlated self-join (PlanSpec pins no nested-loop/cartesian). The (order, supplier) aggregate feeds BOTH the per-order rollup and the late-line branch, so it is lineage-cut ONCE (ADVICE r14: before the cut only the shuffle files were reused and the post-shuffle aggregation ran twice); the supplier/nation dim broadcasts last; top-100 deterministic via the suppkey tiebreak.",
       "tq22_global_sales" -> "TPC-H Q22 (adapted): the no-recent-orders check is a LEFT ANTI hash join on custkey (PlanSpec-pinned); the above-average-balance threshold is a 1-row stats BROADCAST cross compared in EXACT integer arithmetic (acctbal_cents * n_pos > sum_cents), so the qualifying set is engine-independent; the final rollup's key space is the 6 country codes.",
       "l46b_kcore_deep" -> "The PEELING k-core twin of l46 (k=75, inside the fixture's degree distribution at every SF): the same once-built u-partitioned edge base and node-scale per-round state, but each of the 3 rounds actually removes nodes (sf0.001 cascade: 200 -> 176 -> 143 -> 54 survivors), so the measured cost and the 10x exponent price real peel work — decrement counts via semi-join on the removed set, degree table updated by anti-join + left join, edges never rewritten.",
-      "kcore_converged" -> "Run-to-convergence k-core (registry converge=true): the SAME per-round shape as l46 (one degree aggregation + two node-scale semi-joins) but each round materializes for the free edge-count stop signal; shown is the final round's plan over the previous round's checkpoint-backed edge base — lineage never deepens past one round.",
+      "kcore_converged" -> "Run-to-convergence k-core (registry converge=true): the l46 peel loop itself with rounds = max_rounds — it stops at the first round that removes no node, which is the Seidman fixpoint, and the transform warns only if a node below k survives the cap; shown is the survivor filter over the checkpoint-backed degree table — lineage never deepens past one round.",
       "label_prop_converged" -> "Run-to-convergence LPA (registry converge=true): per round the l40 shape (edge join + struct-MAX argmax SortAggregate — the r17 packed-long HashAggregate variant measured slower, tools/l40_argmax.json) plus one node-keyed changed-count join (integer rows); shown is the final round over the prior round's checkpoint — the unroll never composes.",
       "pagerank_converged" -> "Run-to-convergence PageRank (registry converge=true): per round the l26 shape (edge contribution join + dst inflow agg) plus the node-keyed L1-delta join; rank vectors live as round checkpoints, so the plan stays one-round deep at any iteration count.",
       "l52_ks_drift" -> "Two-sample KS length drift: one (source, length) count shuffle reduces the corpus to grid rows; CDFs are source-keyed cumulative windows; the pooled cumulative REAGGREGATES per-source cumulatives by length — no global window anywhere.")
@@ -407,11 +407,13 @@ object DumpPlans {
       "l7f_knn_ivfpq" -> graft.ops.VectorOps.l7fKnnIvfPq,
       // the converge=true registry paths (no SparkEntry twin — the
       // declared graph queries stay fixed-round for the oracle)
-      "kcore_converged" -> ((s, dd) => graft.ops.Graphs.kcorePeelConverged(
-        graft.ops.Graphs.coOccurrenceEdges(s, dd), k = 3, maxRounds = 50)),
+      "kcore_converged" -> ((s, dd) => graft.ops.Graphs.kcorePeel(
+        graft.ops.Graphs.adjacency(graft.ops.Graphs.coOccurrenceEdges(s, dd)),
+        k = 3, rounds = 50)),
       "label_prop_converged" -> ((s, dd) => graft.ops.Graphs
         .labelPropagationConverged(
-          graft.ops.Graphs.coOccurrenceEdges(s, dd), maxRounds = 25)),
+          graft.ops.Graphs.adjacency(graft.ops.Graphs.coOccurrenceEdges(s, dd)),
+          maxRounds = 25)),
       "pagerank_converged" -> ((s, dd) => {
         import org.apache.spark.sql.functions._
         val li = graft.core.Tables.lineitem(s, dd)
@@ -745,7 +747,8 @@ attribution CORRECTED by the r17 finding above):
   SortAggregate streams its sorted input with bounded memory and hands
   the next round ordered rows, while the hash map adds per-task state
   exactly where this tier is memory-bound. The declared plan keeps the
-  struct max; the rejected posture stays re-measurable in the probe.
+  struct max; the rejected posture's measurements stay in
+  tools/l40_argmax.json.
 - **l49/l5f**: e2_pure ~ 1.2 with exactly-linear shuffle volumes
   (176 -> 1864 MB) and zero spill. Phase isolation (r16 phase runs +
   GRAFT_CC_DEBUG) found the term: connectedComponents built its

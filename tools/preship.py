@@ -155,6 +155,29 @@ def gated_queries(changed_main):
     return gated, reasons, ungated
 
 
+PACKAGE = re.compile(r'^package\s+([\w.]+)', re.M)
+SUITE_CLASS = re.compile(
+    r'^(?:final\s+)?class\s+([A-Za-z_]\w*)\b[^\n{]*\bextends\b', re.M)
+
+
+def spec_class(path):
+    """Fully qualified class name of the suite a test source defines, e.g.
+    src/test/scala/graft/pipeline/StatusRecordSpec.scala ->
+    graft.pipeline.StatusRecordSpec. None when the file is gone (a deleted
+    spec cannot be run) or defines no concrete suite class (a trait such as
+    SparkSpec, an object such as ListenerBusAccess)."""
+    try:
+        with open(os.path.join(REPO, path)) as f:
+            src = f.read()
+    except FileNotFoundError:
+        return None
+    m = SUITE_CLASS.search(src)
+    if not m:
+        return None
+    pkgs = PACKAGE.findall(src)
+    return ".".join(pkgs + [m.group(1)])
+
+
 def specs_referencing(files):
     """Specs whose source references any top-level type of `files`."""
     names = set()
@@ -170,19 +193,17 @@ def specs_referencing(files):
                 src = fh.read()
             if any(re.search(r'\b' + re.escape(n) + r'\b', src)
                    for n in names):
-                m = re.search(r'([A-Za-z_]\w*)\.scala$', t)
-                if m:
-                    specs.add("graft." + m.group(1))
-    return specs
+                specs.add(spec_class(t))
+    return specs - {None}
+
+
+def changed_specs(changed_test):
+    """Suites defined by the changed test files that still exist."""
+    return {spec_class(t) for t in changed_test} - {None}
 
 
 def touched_specs(changed_main, changed_test):
-    specs = set()
-    for t in changed_test:
-        m = re.search(r'([A-Za-z_]\w*)\.scala$', t)
-        if m:
-            specs.add("graft." + m.group(1))
-    return sorted(specs | specs_referencing(changed_main))
+    return sorted(changed_specs(changed_test) | specs_referencing(changed_main))
 
 
 def main():
@@ -256,10 +277,7 @@ def main():
     # the full touched-spec closure, and skipping them is how unexecuted
     # changes ship.
     spec_only_main = [f for f in ungated if f not in uncovered]
-    mandatory = set(specs_referencing(spec_only_main)) | {
-        ("graft." + m.group(1))
-        for t in changed_test
-        for m in [re.search(r'([A-Za-z_]\w*)\.scala$', t)] if m}
+    mandatory = specs_referencing(spec_only_main) | changed_specs(changed_test)
     # ADVICE r14: plan-SHAPE pins are value-invisible — the oracle verifies
     # a registry-gated change's VALUES, but a broadcast→shuffle or
     # semi→nested-loop regression keeps values identical, so PlanSpec is

@@ -1,15 +1,18 @@
 #!/usr/bin/env python3
-"""Self-test for preship.py's declared-query collection.
+"""Self-test for preship.py's declared-query collection and spec naming.
 
 A registry file also holds `"name" -> value` pairs that are not declared
 queries (pipeline StepSpec inputs and parameters, oracle maps); only the
 keys inside the `val queries: Map[String, ...] = Map(...)` body may gate
-Verify.
+Verify. A spec is run by its fully qualified class name, which follows
+its package, not its file name; deleted files and files that define no
+suite are not run at all.
 
 Run: python3 tools/test_preship.py   (exit 0 = all cases hold)
 """
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import preship
@@ -46,6 +49,34 @@ def main():
          preship.parse_registry('object A { val m = Map("k" -> 1) }')[0]
          == set()),
     ]
+    with tempfile.TemporaryDirectory() as tmp:
+        nested = os.path.join(tmp, "NestedSpec.scala")
+        with open(nested, "w") as f:
+            f.write("package graft\npackage deep\n\n"
+                    "final class NestedSpec extends SparkSpec {}\n")
+        cases += [
+            ("sub-package spec named by its package",
+             preship.spec_class("src/test/scala/graft/pipeline/StatusRecordSpec.scala")
+             == "graft.pipeline.StatusRecordSpec"),
+            ("top-level spec",
+             preship.spec_class("src/test/scala/graft/GraphsReliableSpec.scala")
+             == "graft.GraphsReliableSpec"),
+            ("chained package clauses and a final class",
+             preship.spec_class(nested) == "graft.deep.NestedSpec"),
+            ("a trait is no suite",
+             preship.spec_class("src/test/scala/graft/SparkSpec.scala") is None),
+            ("an object is no suite",
+             preship.spec_class(
+                 "src/test/scala/org/apache/spark/ListenerBusAccess.scala") is None),
+            ("a deleted spec is not run",
+             preship.spec_class(os.path.join(tmp, "GoneSpec.scala")) is None),
+            ("changed specs drop deleted and suite-less files",
+             preship.changed_specs([
+                 "src/test/scala/graft/pipeline/StatusRecordSpec.scala",
+                 "src/test/scala/graft/SparkSpec.scala",
+                 os.path.join(tmp, "GoneSpec.scala")])
+             == {"graft.pipeline.StatusRecordSpec"}),
+        ]
     ok = True
     for name, held in cases:
         print(f"selftest {'ok' if held else 'BROKEN'}: {name}")
@@ -53,7 +84,7 @@ def main():
     if not ok:
         print(f"collected keys: {sorted(keys)}, types: {sorted(types)}")
         return 1
-    print(f"== all {len(cases)} preship registry cases hold")
+    print(f"== all {len(cases)} preship cases hold")
     return 0
 
 
